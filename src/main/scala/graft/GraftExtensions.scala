@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{Md5Lower64Bits, RollingHash64, TextKernels, VectorDot}
 
 /** Session extensions: registers the native graft expressions for SQL
-  * users. Enable with
+  * users and the graft optimizer / query-stage rules. Enable with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` — the
   * standard plug-in point, so a cluster picks the functions up from
   * config alone (no code changes in notebooks/jobs).
@@ -17,6 +17,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // dedup expensive subexpressions inside Filter predicates. PreCBO =
     // after the pushdown fixed point, so the rewrite cannot be re-inlined
     ext.injectPreCBORule(_ => graft.plans.DedupExpensiveFilter)
+    // a global sort over at most one partition's worth of data sorts in
+    // one partition: no range-sampling job (see SmallSortSinglePartition)
+    ext.injectQueryStagePrepRule(_ => graft.plans.SmallSortSinglePartition)
     ext.injectFunction((
       new FunctionIdentifier("md5_lower64_bits"),
       new ExpressionInfo(classOf[Md5Lower64Bits].getName, "md5_lower64_bits"),

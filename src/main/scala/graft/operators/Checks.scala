@@ -16,21 +16,44 @@ import org.apache.spark.sql.functions._
   *
   * Scale: every check is a filter (no shuffle) except unique/combination
   * (one partial-agg groupBy on the key) and relationships (a broadcast or
-  * shuffle anti-join) — all linear, all AQE-friendly.
+  * shuffle anti-join) — all linear, all AQE-friendly. `summarize` counts
+  * all row-level checks over one base in a single pass over it.
   */
 object Checks {
 
-  /** One named check with dbt-style severity. */
-  final case class Check(name: String, severity: String, violations: DataFrame)
+  /** One named check with dbt-style severity. A row-level check also
+    * records its base frame and violation predicate (`violations` is then
+    * `base.where(predicate)`), so [[summarize]] can count it alongside the
+    * other row-level checks over the same base. */
+  final case class Check(name: String, severity: String, violations: DataFrame,
+      rowLevel: Option[(DataFrame, Column)] = None)
 
-  /** Rows where `expr` is FALSE (dbt semantics: nulls pass — the
-    * expression test is `where not(expression)`, which drops null rows). */
+  object Check {
+    /** A row-level check: the rows of `base` where `predicate` is TRUE. */
+    def rows(name: String, severity: String, base: DataFrame,
+        predicate: Column): Check =
+      Check(name, severity, base.where(predicate), Some(base -> predicate))
+  }
+
+  /** Violation predicate of `expressionIsTrue` (dbt semantics: nulls
+    * pass — the expression test is `where not(expression)`, which drops
+    * null rows). */
+  def notTrue(expr: Column): Column = !expr
+
+  /** Violation predicate of `notNull`. */
+  def isNullKey(c: String): Column = col(c).isNull
+
+  /** Violation predicate of `acceptedValues` (nulls pass). */
+  def notAccepted(c: String, values: Seq[String]): Column =
+    col(c).isNotNull && !col(c).isin(values: _*)
+
+  /** Rows where `expr` is FALSE. */
   def expressionIsTrue(df: DataFrame, expr: Column): DataFrame =
-    df.where(!expr)
+    df.where(notTrue(expr))
 
   /** Rows with a null key. */
   def notNull(df: DataFrame, c: String): DataFrame =
-    df.where(col(c).isNull)
+    df.where(isNullKey(c))
 
   /** One row per duplicated key value (count > 1). */
   def unique(df: DataFrame, c: String): DataFrame =
@@ -50,26 +73,52 @@ object Checks {
 
   /** Rows whose value is outside the accepted set (nulls pass). */
   def acceptedValues(df: DataFrame, c: String, values: Seq[String]): DataFrame =
-    df.where(col(c).isNotNull && !col(c).isin(values: _*))
+    df.where(notAccepted(c, values))
 
   /** Summarize a battery into (check_name, severity, n_violations,
-    * status) — the shape a scheduler alerts on. Counts run as independent
-    * jobs; each is a cheap aggregate over the violation plan. `status` is
-    * dbt run semantics: a violating error-severity check is 'fail', a
-    * violating warn-severity check is 'warn' (logged, run continues — all
-    * 13 reference singular tests are `severity: warn`, e.g.
-    * reference tests/stg_shipments__delivered_after_shipped.sql:1), a
-    * clean check is 'pass'. */
+    * status) — the shape a scheduler alerts on, ordered by check name.
+    *
+    * Row-level checks over the same base frame (`Dataset.sameSemantics`)
+    * are counted in ONE aggregate over that base, one `count_if` per
+    * check — a battery of nine row tests over three tables scans each
+    * table once, not once per test — and unpivoted back to one row per
+    * check. Every other check is one count over its violation plan.
+    * `status` is dbt run semantics: a violating error-severity check is
+    * 'fail', a violating warn-severity check is 'warn' (logged, run
+    * continues — all 13 reference singular tests are `severity: warn`,
+    * e.g. reference tests/stg_shipments__delivered_after_shipped.sql:1),
+    * a clean check is 'pass'. */
   def summarize(checks: Seq[Check]): DataFrame = {
-    val counted = checks.map { c =>
-      c.violations.agg(count(lit(1)).as("n_violations"))
-        .select(lit(c.name).as("check_name"), lit(c.severity).as("severity"),
-          col("n_violations"),
-          when(col("n_violations") === 0L, "pass")
-            .otherwise(if (c.severity == "error") "fail" else "warn")
-            .as("status"))
+    // columns and unpivot labels are slot ids; names and severities are
+    // looked up once at the end, so any check name is safe
+    val slot = (i: Int) => s"c$i"
+    val indexed = checks.zipWithIndex
+    val rowBases = indexed.collect { case (Check(_, _, _, Some((base, _))), _) => base }
+      .foldLeft(Seq.empty[DataFrame]) { (acc, b) =>
+        if (acc.exists(_.sameSemantics(b))) acc else acc :+ b }
+    val fused = rowBases.map { base =>
+      val group = indexed.collect {
+        case (Check(_, _, _, Some((b, pred))), i) if b.sameSemantics(base) => (pred, i)
+      }
+      val counts = group.map { case (pred, i) => count_if(pred).as(slot(i)) }
+      base.agg(counts.head, counts.tail: _*)
+        .unpivot(Array.empty[Column], group.map(g => col(slot(g._2))).toArray,
+          "slot", "n_violations")
     }
-    counted.reduce(_ unionAll _).orderBy(col("check_name"))
+    val single = indexed.collect { case (c, i) if c.rowLevel.isEmpty =>
+      c.violations.agg(count(lit(1)).as("n_violations"))
+        .select(lit(slot(i)).as("slot"), col("n_violations"))
+    }
+    def lookup(f: Check => String): Column =
+      element_at(typedLit(indexed.map { case (c, i) => slot(i) -> f(c) }.toMap), col("slot"))
+    (fused ++ single).reduce(_ unionAll _)
+      .select(lookup(_.name).as("check_name"), lookup(_.severity).as("severity"),
+        col("n_violations"))
+      .withColumn("status",
+        when(col("n_violations") === 0L, "pass")
+          .when(col("severity") === "error", "fail")
+          .otherwise("warn"))
+      .orderBy(col("check_name"))
   }
 
   /** Severity-faithful RUN verdict over a summarized battery: the run

@@ -128,7 +128,8 @@ object CheckQueries {
     * and the run verdict cannot drift. Messy columns (email, lat/lon,
     * shipments with delivery dates, country codes, tracking numbers) are
     * synthesized deterministically from keys; the oracle derives them
-    * identically. */
+    * identically. Each table's messy columns live on ONE derived frame,
+    * so `Checks.summarize` counts all row tests on a table in one pass. */
   private def battery(s: org.apache.spark.sql.SparkSession,
       dir: String): Seq[Checks.Check] = {
     val cust = Tables.customer(s, dir)
@@ -136,65 +137,59 @@ object CheckQueries {
     val li   = Tables.lineitem(s, dir)
     val ev   = Tables.events(s, dir)
 
-    val withEmail = cust.withColumn("email",
-      when(col("c_custkey") % 11 === 0, lit("@broken"))
-        .otherwise(concat(lit("c"), col("c_custkey"), lit("@example.com"))))
-    val withGeo = cust
-      .withColumn("latitude", (col("c_custkey") % 200 - 100).cast("double"))
-      .withColumn("longitude", (col("c_custkey") % 400 - 200).cast("double"))
     // country_code: %13==0 seeds a 4-char violation, %13==1 is null (the
     // reference test passes nulls), 2- and 3-char codes are both legal
     // (reference tests/stg_addresses_country_len.sql:4-5).
-    val withCountry = cust.withColumn("country_code",
+    val custX = cust.select(col("*"),
+      when(col("c_custkey") % 11 === 0, lit("@broken"))
+        .otherwise(concat(lit("c"), col("c_custkey"), lit("@example.com"))).as("email"),
+      (col("c_custkey") % 200 - 100).cast("double").as("latitude"),
+      (col("c_custkey") % 400 - 200).cast("double").as("longitude"),
       when(col("c_custkey") % 13 === 0, lit("GBRX"))
         .when(col("c_custkey") % 13 === 1, lit(null).cast("string"))
         .when(col("c_custkey") % 13 === 2, lit("US"))
-        .otherwise(lit("ARE")))
-    val shipments = li.select(col("l_orderkey"), col("l_linenumber"),
+        .otherwise(lit("ARE")).as("country_code"))
+    // shipments: tracking_number %17==0 seeds the empty-string violation,
+    // %17==1 is null (passes — reference tests/stg_shipments__tracking_
+    // number_shape.sql:5-6 requires NOT NULL AND length < 1).
+    val liX = li.select(col("*"),
       col("l_shipdate").as("shipped_at"),
-      expr("date_add(l_shipdate, CAST(l_partkey % 5 AS INT) - 1)").as("delivered_at"))
-    // tracking_number: %17==0 seeds the empty-string violation, %17==1 is
-    // null (passes — reference tests/stg_shipments__tracking_number_shape
-    // .sql:5-6 requires NOT NULL AND length < 1).
-    val withTracking = shipments.withColumn("tracking_number",
+      expr("date_add(l_shipdate, CAST(l_partkey % 5 AS INT) - 1)").as("delivered_at"),
       when((col("l_orderkey") + col("l_linenumber")) % 17 === 0, lit(""))
         .when((col("l_orderkey") + col("l_linenumber")) % 17 === 1,
           lit(null).cast("string"))
         .otherwise(concat(lit("TRK"), col("l_orderkey"), lit("-"),
-          col("l_linenumber"))))
+          col("l_linenumber"))).as("tracking_number"))
 
     Seq(
-      Checks.Check("not_null_customer_name", "error",
-        Checks.notNull(cust, "c_name")),
+      Checks.Check.rows("not_null_customer_name", "error",
+        custX, Checks.isNullKey("c_name")),
       Checks.Check("unique_order_key", "error",
         Checks.unique(ord, "o_orderkey")),
       Checks.Check("unique_combo_cust_orderdate", "warn",
         Checks.uniqueCombination(ord, Seq("o_custkey", "o_orderdate"))),
-      Checks.Check("expr_extendedprice_nonneg", "error",
-        Checks.expressionIsTrue(li, col("l_extendedprice") >= 0)),
-      Checks.Check("expr_discount_in_range", "warn",
-        Checks.expressionIsTrue(li, col("l_discount").between(0.0d, 0.08d))),
-      Checks.Check("email_shape", "warn",
-        withEmail.where(col("email").isNotNull && instr(col("email"), "@") <= 1)),
-      Checks.Check("latlon_range", "warn",
-        withGeo.where(
-          (col("latitude").isNotNull && !col("latitude").between(-90, 90)) ||
-            (col("longitude").isNotNull && !col("longitude").between(-180, 180)))),
-      Checks.Check("country_len", "warn",
-        withCountry.where(col("country_code").isNotNull &&
-          !length(col("country_code")).isin(2, 3))),
-      Checks.Check("tracking_number_shape", "warn",
-        withTracking.where(col("tracking_number").isNotNull &&
-          length(col("tracking_number")) < 1)),
+      Checks.Check.rows("expr_extendedprice_nonneg", "error",
+        liX, Checks.notTrue(col("l_extendedprice") >= 0)),
+      Checks.Check.rows("expr_discount_in_range", "warn",
+        liX, Checks.notTrue(col("l_discount").between(0.0d, 0.08d))),
+      Checks.Check.rows("email_shape", "warn",
+        custX, col("email").isNotNull && instr(col("email"), "@") <= 1),
+      Checks.Check.rows("latlon_range", "warn", custX,
+        (col("latitude").isNotNull && !col("latitude").between(-90, 90)) ||
+          (col("longitude").isNotNull && !col("longitude").between(-180, 180))),
+      Checks.Check.rows("country_len", "warn", custX,
+        col("country_code").isNotNull && !length(col("country_code")).isin(2, 3)),
+      Checks.Check.rows("tracking_number_shape", "warn", liX,
+        col("tracking_number").isNotNull && length(col("tracking_number")) < 1),
       Checks.Check("fk_orders_customer", "error",
         Checks.relationships(ord, "o_custkey", cust, "c_custkey")),
       Checks.Check("fk_events_user_customer", "warn",
         Checks.relationships(ev, "user_id", cust, "c_custkey")),
-      Checks.Check("delivered_after_shipped", "warn",
-        shipments.where(col("delivered_at").isNotNull &&
-          col("shipped_at").isNotNull && col("delivered_at") < col("shipped_at"))),
-      Checks.Check("accepted_order_status", "error",
-        Checks.acceptedValues(ord, "o_orderstatus", Seq("O", "F", "P"))))
+      Checks.Check.rows("delivered_after_shipped", "warn", liX,
+        col("delivered_at").isNotNull && col("shipped_at").isNotNull &&
+          col("delivered_at") < col("shipped_at")),
+      Checks.Check.rows("accepted_order_status", "error",
+        ord, Checks.notAccepted("o_orderstatus", Seq("O", "F", "P"))))
   }
 
   /** Oracle twin of `Checks.summarize(battery(...))` — the q37 SELECT

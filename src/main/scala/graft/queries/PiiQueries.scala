@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.operators.Pii
 import graft.sources.Tables
@@ -174,18 +175,25 @@ object PiiQueries {
 
     // PII SCAN: per-class documents-hit + match counts over the
     // augmented corpus. Map-only (regexp_extract_all projections, no
-    // shuffle until the 4-row rollup) — at 100 TB this is a scan-cost
+    // shuffle until the one-row rollup) — at 100 TB this is a scan-cost
     // pass. The oracle recomputes every pattern with RE2.
     QueryDef(
       "q397_pii_scan",
       (s, dir) => {
+        // every class's two sums in ONE aggregate over one scan, then
+        // unpivoted to a row per class
         val sc = Pii.scan(augmented(Tables.documents(s, dir)), "text")
-        Pii.patterns.map { case (cls, _) =>
-          sc.agg(
+        val sums = Pii.patterns.map { case (cls, _) =>
+          struct(
             sum(when(col(s"${cls}_n") > 0, 1L).otherwise(0L)).as("docs_hit"),
-            sum(col(s"${cls}_n").cast("long")).as("matches"))
-            .select(lit(cls).as("pii_class"), col("docs_hit"), col("matches"))
-        }.reduce(_ unionByName _).orderBy(col("pii_class"))
+            sum(col(s"${cls}_n").cast("long")).as("matches")).as(cls)
+        }
+        sc.agg(sums.head, sums.tail: _*)
+          .unpivot(Array.empty[Column], Pii.patterns.map(p => col(p._1)).toArray,
+            "pii_class", "v")
+          .select(col("pii_class"), col("v.docs_hit").as("docs_hit"),
+            col("v.matches").as("matches"))
+          .orderBy(col("pii_class"))
       },
       Some(s"""
         WITH $augSql,

@@ -59,7 +59,9 @@ object ScaleQueries {
     // Bucketed range join: ship-date points against 30-day order windows
     // as an equi-join on overlap buckets + exact filter (a naive
     // inequality join plans as BroadcastNestedLoop). Oracle IS the naive
-    // inequality join.
+    // inequality join. Synthetic lineitem repeats (l_orderkey,
+    // l_linenumber) with different ship dates, so the ORDER BY ends in
+    // ship_day, start_day to be total.
     QueryDef(
       "q44_range_join",
       (s, dir) => {
@@ -76,7 +78,8 @@ object ScaleQueries {
         Skew.rangeJoin(points, "ship_day", intervals, "start_day", "end_day", 32L)
           .select(col("item_order"), col("item_line"), col("window_order"),
             col("ship_day"), col("start_day"))
-          .orderBy(col("item_order"), col("item_line"), col("window_order"))
+          .orderBy(col("item_order"), col("item_line"), col("window_order"),
+            col("ship_day"), col("start_day"))
       },
       Some("""
         WITH p AS (
@@ -89,7 +92,7 @@ object ScaleQueries {
           FROM orders WHERE o_orderkey % 503 = 0)
         SELECT item_order, item_line, window_order, ship_day, start_day
         FROM p JOIN i ON p.ship_day >= i.start_day AND p.ship_day <= i.start_day + 30
-        ORDER BY item_order, item_line, window_order""")),
+        ORDER BY item_order, item_line, window_order, ship_day, start_day""")),
 
     // Approximate sketches — the 100 TB path for distinct counts and
     // percentiles (HLL / GK instead of exact shuffles). The estimates

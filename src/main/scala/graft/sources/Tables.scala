@@ -1,6 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Source registry over the driver's parquet star schema
   * (/root/repo/TESTDATA.md). Mirrors the reference's source() lookup
@@ -17,19 +24,41 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Schema cache, keyed (sfDir, table): what a metastore gives a real
-    * deployment for free. Without it every `spark.read.parquet` call
-    * re-runs footer schema inference on the DRIVER (~80 ms per call
-    * measured at sf0.1 vs ~8 ms with the schema supplied) — across a
-    * ~400-query bench session that is pure per-query floor, paid again
-    * for every table reference. Caches METADATA only (a StructType);
-    * every query still scans the parquet for its data, so results are
-    * never memoized. Keyed by directory so mixed-SF sessions (Verify
-    * runs three SFs) cannot cross-contaminate, and the ts physical-type
-    * variants (nanos-long vs NTZ, below) stay per-directory. */
+  /** Schema cache, keyed (path, file length, modification time): what a
+    * metastore gives a real deployment for free. Without it every
+    * `spark.read.parquet` call re-runs schema inference — a one-task Spark
+    * job (~100 ms measured at sf0.1) — paid again for every table
+    * reference. Caches METADATA only (a StructType); every query still
+    * scans the parquet for its data, so results are never memoized. The
+    * path is the caller's spelling, so mixed-SF sessions (Verify runs
+    * three SFs) cannot cross-contaminate; length and modification time
+    * come from the `FileStatus` the footer read fetches anyway, so a
+    * rewritten table is re-read instead of served a stale schema. */
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      org.apache.spark.sql.types.StructType]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), StructType]()
+
+  /** Spark's inferred schema of one parquet path, without a Spark job:
+    * a single file's footer is read on the driver and converted with the
+    * session's `ParquetToSparkSchemaConverter` (the same per-footer step
+    * Spark's inference runs inside its job); a directory dataset keeps
+    * `spark.read.parquet(..).schema`, which also merges partition
+    * columns. Nullable like every file-source relation's data schema. */
+  def inferSchema(spark: SparkSession, path: String): StructType = {
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val status = p.getFileSystem(hadoopConf).getFileStatus(p)
+    schemaCache.computeIfAbsent((path, status.getLen, status.getModificationTime), { _ =>
+      if (status.isDirectory) spark.read.parquet(path).schema
+      else {
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(status, hadoopConf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        GraftSqlBridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
+          new Footer(status.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+      }
+    })
+  }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // ts normalization: the driver's generator has shipped events.ts as both
@@ -45,9 +74,7 @@ object Tables {
     // physical type the generator emitted.
     if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = schemaCache.computeIfAbsent((sfDir, name), { _ =>
-      spark.read.parquet(s"$sfDir/$name.parquet").schema
-    })
+    val schema = inferSchema(spark, s"$sfDir/$name.parquet")
     val df = spark.read.schema(schema).parquet(s"$sfDir/$name.parquet")
     df.schema.fields.foldLeft(df) {
       case (acc, f) if f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType =>

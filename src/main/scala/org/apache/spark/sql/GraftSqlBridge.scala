@@ -1,13 +1,17 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StructType
 
-/** Minimal bridge to Spark's private[sql] Column ↔ Expression converters —
-  * the standard shim every Spark extension library ships so custom
+/** Minimal bridge to Spark's private[sql] Column ↔ Expression converters
+  * and `StructType.asNullable` — the standard shim every Spark extension library ships so custom
   * Catalyst expressions can surface as Columns without registering a SQL
   * function first. No Spark internals are modified.
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  /** The schema with every field (nested too) nullable — what a file
+    * source relation exposes as its data schema. */
+  def asNullable(s: StructType): StructType = s.asNullable
 }

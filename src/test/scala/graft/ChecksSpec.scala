@@ -53,6 +53,34 @@ class ChecksSpec extends SparkSpec {
     assert(v.getString(3) === "fail" && v.getLong(1) === 1L && v.getLong(2) === 1L)
   }
 
+  test("summarize fuses row checks: one aggregate per base, counts as per check") {
+    val withNull = df.withColumn("v2", when(col("id") === 3, null).otherwise(col("v")))
+    val other = Seq(1L, 5L, 9L).toDF("k")
+    val checks = Seq(
+      Checks.Check.rows("a_null_grp", "error", withNull, Checks.isNullKey("grp")),
+      Checks.Check("b_unique_id", "warn", Checks.unique(withNull, "id")),
+      // the null v2 row is NOT a violation: nulls pass expression_is_true
+      Checks.Check.rows("c_v2_nonneg", "warn", withNull, Checks.notTrue(col("v2") >= 0)),
+      Checks.Check.rows("d_grp_accepted", "error", withNull,
+        Checks.notAccepted("grp", Seq("a"))),
+      Checks.Check.rows("e_k_small", "warn", other, Checks.notTrue(col("k") < 6)),
+      Checks.Check.rows("f_k_odd", "error", other, Checks.notTrue(col("k") % 2 === 1)))
+    val summary = Checks.summarize(checks)
+    // two fused row-check aggregates + unique's two (group, then count)
+    val aggs = summary.queryExecution.optimizedPlan.collect {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a }
+    assert(aggs.size === 4, summary.queryExecution.optimizedPlan.toString)
+    val got = summary.collect().map(r => (r.getString(0), r.getString(1),
+      r.getLong(2), r.getString(3))).toSeq
+    val perCheck = checks.map { c =>
+      val n = c.violations.count()
+      (c.name, c.severity, n,
+        if (n == 0) "pass" else if (c.severity == "error") "fail" else "warn")
+    }.sortBy(_._1)
+    assert(got === perCheck)
+    assert(got.map(_._3) === Seq(1L, 1L, 1L, 1L, 1L, 0L))
+  }
+
   test("Materialize: table sink writes partitioned parquet; view resolves name") {
     val out = java.nio.file.Files.createTempDirectory("graft_mat").toString
     Materialize.table(df, out, "GOLD", "t1", partitionBy = Seq("grp"))

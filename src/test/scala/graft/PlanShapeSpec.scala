@@ -155,6 +155,54 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  /** Jobs a collect() of `df` runs, and its final adaptive plan. */
+  private def collectJobs(df: org.apache.spark.sql.Dataset[_]): (Int, String) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      df.collect()
+      Thread.sleep(300) // let async job-start events drain
+    } finally spark.sparkContext.removeSparkListener(l)
+    (jobs.get, df.queryExecution.executedPlan.toString)
+  }
+
+  test("a small global sort runs in one partition, with no range-sampling job") {
+    import org.apache.spark.sql.functions._
+    val base = spark.range(0, 2000, 1, 4).select((col("id") * 7 % 1000).as("x"))
+    val (smallJobs, small) = collectJobs(base.orderBy(col("x").desc))
+    assert(small.contains("Exchange SinglePartition, ENSURE_REQUIREMENTS") &&
+      !small.contains("rangepartitioning"), s"small sort must not range-shuffle:\n$small")
+    // the same sort under a generator keeps its range shuffle — and pays
+    // exactly one more job, the partitioner's sampling pass
+    val exploded = base.select(explode(array(col("x"), col("x") + 1)).as("x"))
+    val (genJobs, gen) = collectJobs(exploded.orderBy(col("x").desc))
+    assert(gen.contains("rangepartitioning"),
+      s"a generator's size estimate is no upper bound; keep the range shuffle:\n$gen")
+    assert(genJobs === smallJobs + 1, s"jobs: small sort $smallJobs, generator sort $genJobs")
+    // sorted output is identical either way
+    assert(base.orderBy(col("x").desc).collect().map(_.getLong(0)).toSeq ===
+      (0 until 2000).map(i => i * 7L % 1000).sorted.reverse)
+  }
+
+  test("a sort above one partition's worth keeps its range shuffle") {
+    import org.apache.spark.sql.functions._
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1k")
+    try {
+      val (_, p) = collectJobs(spark.range(0, 2000, 1, 4).orderBy(col("id").desc))
+      assert(p.contains("rangepartitioning"), s"16 KB over a 1 KB partition size:\n$p")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // user range repartitioning is never rewritten
+    val r = spark.range(0, 100, 1, 4).repartitionByRange(4, col("id"))
+    assert(collectJobs(r)._2.contains("rangepartitioning"))
+  }
+
   test("q171 truth-side top-10 plans as TakeOrderedAndProject, not a rank window") {
     val p = plan("q171_cms_heavy_hitters")
     assert(p.contains("TakeOrderedAndProject"),
@@ -187,12 +235,9 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q169/q178 run no eager job at query-construction time") {
     // the round-6 verdict flagged q169's `o.count()` (a driver-side
-    // action inside the builder); pin: no DATA-scanning job during plan
-    // construction. Every fresh `spark.read.parquet` fires one 1-task
-    // footer/schema-inference job at read time (metadata-sized, callsite
-    // = the Tables.scala read line, identical for every query) — that is
-    // the ONLY job construction may run; a builder-embedded action like
-    // count() carries its own callsite and trips the pin.
+    // action inside the builder); pin: no job at all during plan
+    // construction. Table loads read the parquet footer on the driver
+    // (Tables.inferSchema), so not even schema inference runs a job.
     Seq("q169_analyze_stats", "q178_selectivity_estimate").foreach { q =>
       val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val l = new org.apache.spark.scheduler.SparkListener {
@@ -206,11 +251,9 @@ class PlanShapeSpec extends SparkSpec {
         SparkEntry.queries(q)(spark, dir).queryExecution.optimizedPlan
         Thread.sleep(300) // let any async job-start events drain
       } finally spark.sparkContext.removeSparkListener(l)
-      val scanning = jobs.toArray(Array.empty[String])
-        .filterNot(_.contains("parquet at Tables.scala"))
-      assert(scanning.isEmpty,
-        s"$q: building the query ran eager data job(s): " +
-          scanning.mkString("; "))
+      val eager = jobs.toArray(Array.empty[String])
+      assert(eager.isEmpty,
+        s"$q: building the query ran eager job(s): " + eager.mkString("; "))
     }
   }
 

@@ -6,11 +6,11 @@
 
 Each pair runs `python3 perfbench/run.py --workload W --seed S --trace 0`
 once in each checkout, the parent first in even pairs and the change
-first in odd ones. Each checkout runs its own, unedited perfbench with its
-own build directory (CARGO_TARGET_DIR, under --build-root). For every
-workload and end-to-end metric of the change's BENCHMARK.json it prints
-each side's median and quartiles, the change's pair wins (ties count for
-neither side), the parent's interquartile range, and two verdicts:
+first in odd ones. Each checkout runs its own, unedited perfbench, which
+builds into that checkout. For every workload and end-to-end metric of the
+change's BENCHMARK.json it prints each side's median and quartiles, the
+change's pair wins (ties count for neither side), the parent's
+interquartile range, and two verdicts:
 
   gain   the change won at least 9 of 10 pairs and the medians differ,
          in the better direction, by more than the parent's IQR
@@ -28,12 +28,11 @@ import subprocess
 import sys
 
 
-def run_once(checkout, workload, seed, build_dir):
-    env = dict(os.environ, CARGO_TARGET_DIR=build_dir)
+def run_once(checkout, workload, seed):
     p = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", str(seed), "--trace", "0"],
-        cwd=checkout, env=env, capture_output=True, text=True)
+        cwd=checkout, capture_output=True, text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
     if p.returncode != 0 or not lines:
         sys.exit(f"ab_pairs: run failed in {checkout} (exit {p.returncode}):\n"
@@ -81,14 +80,10 @@ def main():
     ap.add_argument("--workload", required=True, help="comma-separated workloads")
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--build-root", default=None,
-                    help="parent of the two build dirs (default: each checkout's .bench_build)")
     ap.add_argument("--out", default=None, help="write every run's metrics here")
     args = ap.parse_args()
 
     sides = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
-    builds = {s: os.path.join(os.path.abspath(args.build_root), s) if args.build_root
-              else os.path.join(d, ".bench_build") for s, d in sides.items()}
     spec = json.load(open(os.path.join(sides["change"], "BENCHMARK.json")))
     out = {}
     for w in args.workload.split(","):
@@ -97,7 +92,7 @@ def main():
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
             pair = {}
             for s in order:
-                pair[s] = run_once(sides[s], w, args.seed, builds[s])
+                pair[s] = run_once(sides[s], w, args.seed)
             runs.append(pair)
             print(f"{w} pair {i + 1}/{args.pairs}: makespan parent "
                   f"{pair['parent']['metrics']['makespan_s']:.2f} s, change "

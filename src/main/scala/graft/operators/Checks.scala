@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Expression,
+  SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.functions._
 
 /** Data-quality check library — the reference's test surface as
@@ -21,39 +24,17 @@ import org.apache.spark.sql.functions._
   */
 object Checks {
 
-  /** One named check with dbt-style severity. A row-level check also
-    * records its base frame and violation predicate (`violations` is then
-    * `base.where(predicate)`), so [[summarize]] can count it alongside the
-    * other row-level checks over the same base. */
-  final case class Check(name: String, severity: String, violations: DataFrame,
-      rowLevel: Option[(DataFrame, Column)] = None)
+  /** One named check with dbt-style severity. */
+  final case class Check(name: String, severity: String, violations: DataFrame)
 
-  object Check {
-    /** A row-level check: the rows of `base` where `predicate` is TRUE. */
-    def rows(name: String, severity: String, base: DataFrame,
-        predicate: Column): Check =
-      Check(name, severity, base.where(predicate), Some(base -> predicate))
-  }
-
-  /** Violation predicate of `expressionIsTrue` (dbt semantics: nulls
-    * pass — the expression test is `where not(expression)`, which drops
-    * null rows). */
-  def notTrue(expr: Column): Column = !expr
-
-  /** Violation predicate of `notNull`. */
-  def isNullKey(c: String): Column = col(c).isNull
-
-  /** Violation predicate of `acceptedValues` (nulls pass). */
-  def notAccepted(c: String, values: Seq[String]): Column =
-    col(c).isNotNull && !col(c).isin(values: _*)
-
-  /** Rows where `expr` is FALSE. */
+  /** Rows where `expr` is FALSE (dbt semantics: nulls pass — the
+    * expression test is `where not(expression)`, which drops null rows). */
   def expressionIsTrue(df: DataFrame, expr: Column): DataFrame =
-    df.where(notTrue(expr))
+    df.where(!expr)
 
   /** Rows with a null key. */
   def notNull(df: DataFrame, c: String): DataFrame =
-    df.where(isNullKey(c))
+    df.where(col(c).isNull)
 
   /** One row per duplicated key value (count > 1). */
   def unique(df: DataFrame, c: String): DataFrame =
@@ -73,39 +54,58 @@ object Checks {
 
   /** Rows whose value is outside the accepted set (nulls pass). */
   def acceptedValues(df: DataFrame, c: String, values: Seq[String]): DataFrame =
-    df.where(notAccepted(c, values))
+    df.where(col(c).isNotNull && !col(c).isin(values: _*))
 
   /** Summarize a battery into (check_name, severity, n_violations,
     * status) — the shape a scheduler alerts on, ordered by check name.
     *
-    * Row-level checks over the same base frame (`Dataset.sameSemantics`)
-    * are counted in ONE aggregate over that base, one `count_if` per
-    * check — a battery of nine row tests over three tables scans each
-    * table once, not once per test — and unpivoted back to one row per
-    * check. Every other check is one count over its violation plan.
-    * `status` is dbt run semantics: a violating error-severity check is
-    * 'fail', a violating warn-severity check is 'warn' (logged, run
-    * continues — all 13 reference singular tests are `severity: warn`,
-    * e.g. reference tests/stg_shipments__delivered_after_shipped.sql:1),
-    * a clean check is 'pass'. */
+    * A check whose violations are `base.where(cond)` (not_null,
+    * expression_is_true, accepted_values, a singular row test, and the
+    * final filter of unique) counts as `count_if(cond)` over `base`, and
+    * all such checks over semantically equal bases (`sameResult`) are
+    * counted in ONE aggregate over that base, then unpivoted back to one
+    * row per check: a battery of nine row tests over three tables scans
+    * each table once, not once per test. Every other check is one count
+    * over its violation plan. `status` is dbt run semantics: a violating
+    * error-severity check is 'fail', a violating warn-severity check is
+    * 'warn' (logged, run continues — all 13 reference singular tests are
+    * `severity: warn`, e.g. reference
+    * tests/stg_shipments__delivered_after_shipped.sql:1), a clean check
+    * is 'pass'. */
   def summarize(checks: Seq[Check]): DataFrame = {
     // columns and unpivot labels are slot ids; names and severities are
     // looked up once at the end, so any check name is safe
     val slot = (i: Int) => s"c$i"
     val indexed = checks.zipWithIndex
-    val rowBases = indexed.collect { case (Check(_, _, _, Some((base, _))), _) => base }
-      .foldLeft(Seq.empty[DataFrame]) { (acc, b) =>
-        if (acc.exists(_.sameSemantics(b))) acc else acc :+ b }
-    val fused = rowBases.map { base =>
-      val group = indexed.collect {
-        case (Check(_, _, _, Some((b, pred))), i) if b.sameSemantics(base) => (pred, i)
+    val filters = indexed.flatMap { case (c, i) =>
+      c.violations.queryExecution.analyzed match {
+        case Filter(cond, base) if cond.deterministic &&
+            !SubqueryExpression.hasSubquery(cond) => Some((base, cond, i))
+        case _ => None
       }
-      val counts = group.map { case (pred, i) => count_if(pred).as(slot(i)) }
-      base.agg(counts.head, counts.tail: _*)
-        .unpivot(Array.empty[Column], group.map(g => col(slot(g._2))).toArray,
+    }
+    // group on the base's semantics; a member's condition is rebound to
+    // the group's base by output position (equal plans, other expr ids)
+    val groups = filters.foldLeft(Vector.empty[(LogicalPlan, Vector[(Expression, Int)])]) {
+      case (acc, (base, cond, i)) => acc.indexWhere(_._1.sameResult(base)) match {
+        case -1 => acc :+ (base -> Vector(cond -> i))
+        case g =>
+          val (b, members) = acc(g)
+          val rebind = AttributeMap(base.output.zip(b.output))
+          val rebound = cond.transform { case a: Attribute => rebind.getOrElse(a, a) }
+          acc.updated(g, b -> (members :+ (rebound -> i)))
+      }
+    }
+    val fused = groups.map { case (base, members) =>
+      val counts = members.map { case (cond, i) =>
+        count_if(GraftSqlBridge.column(cond)).as(slot(i)) }
+      GraftSqlBridge.frame(checks.head.violations.sparkSession, base)
+        .agg(counts.head, counts.tail: _*)
+        .unpivot(Array.empty[Column], members.map(m => col(slot(m._2))).toArray,
           "slot", "n_violations")
     }
-    val single = indexed.collect { case (c, i) if c.rowLevel.isEmpty =>
+    val fusedSlots = filters.map(_._3).toSet
+    val single = indexed.collect { case (c, i) if !fusedSlots(i) =>
       c.violations.agg(count(lit(1)).as("n_violations"))
         .select(lit(slot(i)).as("slot"), col("n_violations"))
     }

@@ -1,10 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{CreateArray, Explode, PosExplode}
-import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan, ObjectProducer}
+import org.apache.spark.sql.catalyst.plans.logical.Generate
 import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
 import org.apache.spark.sql.internal.SQLConf
 
@@ -28,14 +27,11 @@ import org.apache.spark.sql.internal.SQLConf
   * estimate is their measured output. At 100 TB the estimate exceeds the
   * threshold and the range shuffle stays.
   *
-  * The swap needs the estimate to be an UPPER bound. Spark's size-only
-  * estimate never grows rows through a filter, join (product of sides),
-  * aggregate, union or expand, but it scales a generator by row width
-  * only, passes a typed flatMap through unchanged, and gives a
-  * checkpointed RDD the estimate of the plan it was cut from. Under any
-  * of those the range shuffle stays; a one-element explode (the pushdown
-  * barrier idiom, see [[DedupExpensiveFilter]]) emits at most one row per
-  * input and does not count.
+  * The swap is meant for inputs whose estimate bounds their size. Spark's
+  * size-only estimate never grows rows through a filter, join (product of
+  * sides), aggregate, union or expand, but it scales a generator
+  * (explode, stack) by row width only, so under a generator the range
+  * shuffle stays.
   *
   * Only `ENSURE_REQUIREMENTS` exchanges are touched: a user's
   * `repartitionByRange` keeps its partitioning. Wired in through
@@ -51,15 +47,7 @@ object SmallSortSinglePartition extends Rule[SparkPlan] {
 
   private def fitsOnePartition(child: SparkPlan): Boolean =
     child.logicalLink.exists { lp =>
-      !lp.exists(unbounded) &&
+      !lp.exists(_.isInstanceOf[Generate]) &&
         lp.stats.sizeInBytes <= conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
     }
-
-  /** A node whose output the size estimate does not bound. */
-  private def unbounded(p: LogicalPlan): Boolean = p match {
-    case Generate(Explode(CreateArray(Seq(_), _)) | PosExplode(CreateArray(Seq(_), _)),
-        _, _, _, _, _) => false
-    case _: Generate | _: ObjectProducer | _: LogicalRDD => true
-    case _ => false
-  }
 }

@@ -162,34 +162,37 @@ object CheckQueries {
           col("l_linenumber"))).as("tracking_number"))
 
     Seq(
-      Checks.Check.rows("not_null_customer_name", "error",
-        custX, Checks.isNullKey("c_name")),
+      Checks.Check("not_null_customer_name", "error",
+        Checks.notNull(custX, "c_name")),
       Checks.Check("unique_order_key", "error",
         Checks.unique(ord, "o_orderkey")),
       Checks.Check("unique_combo_cust_orderdate", "warn",
         Checks.uniqueCombination(ord, Seq("o_custkey", "o_orderdate"))),
-      Checks.Check.rows("expr_extendedprice_nonneg", "error",
-        liX, Checks.notTrue(col("l_extendedprice") >= 0)),
-      Checks.Check.rows("expr_discount_in_range", "warn",
-        liX, Checks.notTrue(col("l_discount").between(0.0d, 0.08d))),
-      Checks.Check.rows("email_shape", "warn",
-        custX, col("email").isNotNull && instr(col("email"), "@") <= 1),
-      Checks.Check.rows("latlon_range", "warn", custX,
-        (col("latitude").isNotNull && !col("latitude").between(-90, 90)) ||
-          (col("longitude").isNotNull && !col("longitude").between(-180, 180))),
-      Checks.Check.rows("country_len", "warn", custX,
-        col("country_code").isNotNull && !length(col("country_code")).isin(2, 3)),
-      Checks.Check.rows("tracking_number_shape", "warn", liX,
-        col("tracking_number").isNotNull && length(col("tracking_number")) < 1),
+      Checks.Check("expr_extendedprice_nonneg", "error",
+        Checks.expressionIsTrue(liX, col("l_extendedprice") >= 0)),
+      Checks.Check("expr_discount_in_range", "warn",
+        Checks.expressionIsTrue(liX, col("l_discount").between(0.0d, 0.08d))),
+      Checks.Check("email_shape", "warn",
+        custX.where(col("email").isNotNull && instr(col("email"), "@") <= 1)),
+      Checks.Check("latlon_range", "warn",
+        custX.where(
+          (col("latitude").isNotNull && !col("latitude").between(-90, 90)) ||
+            (col("longitude").isNotNull && !col("longitude").between(-180, 180)))),
+      Checks.Check("country_len", "warn",
+        custX.where(col("country_code").isNotNull &&
+          !length(col("country_code")).isin(2, 3))),
+      Checks.Check("tracking_number_shape", "warn",
+        liX.where(col("tracking_number").isNotNull &&
+          length(col("tracking_number")) < 1)),
       Checks.Check("fk_orders_customer", "error",
         Checks.relationships(ord, "o_custkey", cust, "c_custkey")),
       Checks.Check("fk_events_user_customer", "warn",
         Checks.relationships(ev, "user_id", cust, "c_custkey")),
-      Checks.Check.rows("delivered_after_shipped", "warn", liX,
-        col("delivered_at").isNotNull && col("shipped_at").isNotNull &&
-          col("delivered_at") < col("shipped_at")),
-      Checks.Check.rows("accepted_order_status", "error",
-        ord, Checks.notAccepted("o_orderstatus", Seq("O", "F", "P"))))
+      Checks.Check("delivered_after_shipped", "warn",
+        liX.where(col("delivered_at").isNotNull &&
+          col("shipped_at").isNotNull && col("delivered_at") < col("shipped_at"))),
+      Checks.Check("accepted_order_status", "error",
+        Checks.acceptedValues(ord, "o_orderstatus", Seq("O", "F", "P"))))
   }
 
   /** Oracle twin of `Checks.summarize(battery(...))` — the q37 SELECT

@@ -55,21 +55,25 @@ class ChecksSpec extends SparkSpec {
 
   test("summarize fuses row checks: one aggregate per base, counts as per check") {
     val withNull = df.withColumn("v2", when(col("id") === 3, null).otherwise(col("v")))
+    // two frames over equal plans with distinct attribute ids share one pass
     val other = Seq(1L, 5L, 9L).toDF("k")
+    val otherAgain = Seq(1L, 5L, 9L).toDF("k")
     val checks = Seq(
-      Checks.Check.rows("a_null_grp", "error", withNull, Checks.isNullKey("grp")),
+      Checks.Check("a_null_grp", "error", Checks.notNull(withNull, "grp")),
       Checks.Check("b_unique_id", "warn", Checks.unique(withNull, "id")),
       // the null v2 row is NOT a violation: nulls pass expression_is_true
-      Checks.Check.rows("c_v2_nonneg", "warn", withNull, Checks.notTrue(col("v2") >= 0)),
-      Checks.Check.rows("d_grp_accepted", "error", withNull,
-        Checks.notAccepted("grp", Seq("a"))),
-      Checks.Check.rows("e_k_small", "warn", other, Checks.notTrue(col("k") < 6)),
-      Checks.Check.rows("f_k_odd", "error", other, Checks.notTrue(col("k") % 2 === 1)))
+      Checks.Check("c_v2_nonneg", "warn", Checks.expressionIsTrue(withNull, col("v2") >= 0)),
+      Checks.Check("d_grp_accepted", "error", Checks.acceptedValues(withNull, "grp", Seq("a"))),
+      Checks.Check("e_k_small", "warn", Checks.expressionIsTrue(other, col("k") < 6)),
+      Checks.Check("f_k_odd", "error", Checks.expressionIsTrue(otherAgain, col("k") % 2 === 1)),
+      Checks.Check("g_orphan", "warn",
+        Checks.relationships(other, "k", withNull.select(col("id").as("k")), "k")))
     val summary = Checks.summarize(checks)
-    // two fused row-check aggregates + unique's two (group, then count)
+    // two fused row-check aggregates, unique's two (group, then count of
+    // its filter) and the anti-join's count
     val aggs = summary.queryExecution.optimizedPlan.collect {
       case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a }
-    assert(aggs.size === 4, summary.queryExecution.optimizedPlan.toString)
+    assert(aggs.size === 5, summary.queryExecution.optimizedPlan.toString)
     val got = summary.collect().map(r => (r.getString(0), r.getString(1),
       r.getLong(2), r.getString(3))).toSeq
     val perCheck = checks.map { c =>
@@ -78,7 +82,7 @@ class ChecksSpec extends SparkSpec {
         if (n == 0) "pass" else if (c.severity == "error") "fail" else "warn")
     }.sortBy(_._1)
     assert(got === perCheck)
-    assert(got.map(_._3) === Seq(1L, 1L, 1L, 1L, 1L, 0L))
+    assert(got.map(_._3) === Seq(1L, 1L, 1L, 1L, 1L, 0L, 2L))
   }
 
   test("Materialize: table sink writes partitioned parquet; view resolves name") {

@@ -1,14 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR.
-  *
-  * Results are materialized through the `noop` datasource sink — unlike
-  * `.count()`, a noop write evaluates every output column and keeps the
-  * final sort, so Catalyst cannot delete the money-math projections or the
-  * global ORDER BY (round-1 verdict: `.count()` under-measured exactly
-  * those). A warmup pass (flagship query) absorbs JVM/codegen startup so
-  * per-query numbers aren't dominated by first-query warmup.
+/** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR
+  * through the `noop` sink ([[Harness.timed]]). A warmup pass absorbs
+  * JVM/codegen startup so per-query numbers aren't dominated by
+  * first-query warmup.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -21,48 +16,9 @@ object Bench {
     if (!sys.props.contains("graft.stream.lifetimes"))
       sys.props("graft.stream.lifetimes") = "1"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // let AQE right-size shuffles in BOTH directions: start high and
-      // coalesce down (small inputs end at ~cpus partitions as before;
-      // big inputs keep enough partitions to stay under the spill
-      // threshold — the sf3.3/sf10 twins measured 1M-row partitions
-      // spilling at initialPartitionNum = cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Clear leftovers persisted by PREVIOUS queries before each run.
-    // Two distinct pools (round-9 watch item — the ~20% driver-vs-builder
-    // suite drift):
-    //   1. cacheManager entries (CC edge frames, catalog nodes) —
-    //      catalog.clearCache().
-    //   2. localCheckpoint blocks from cutLineage()'s local policy: these
-    //      are NOT in the cacheManager; the checkpoint RDD sits in
-    //      sc.persistentRdds and only the ASYNC ContextCleaner reaps its
-    //      blocks after a driver GC notices the dropped reference. Across
-    //      a 379-query suite the blocks accumulate and their eventual
-    //      collection lands inside LATER queries' timed windows. Reap
-    //      deterministically instead: every bench query is self-contained,
-    //      so any still-persisted RDD after the noop write is garbage.
-    def reap(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
-
-    def run(name: String): Unit = {
-      reap()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-    }
+    val spark = Harness.session()
+    def report(name: String)(e: Throwable): Unit =
+      System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
 
     // Warmup: one query per operator family, so first-touch class loading
     // (JsonToStructs, window exec, regex, native sketch expressions) and
@@ -75,18 +31,10 @@ object Bench {
       // HDFS-backed state store, watermark tracking — without this the
       // first streaming query in sort order pays ~1.5 s of first-touch
       "q116_stream_window_parity")
-    warmups.foreach(n => try run(n) catch { case _: Throwable => () })
+    warmups.foreach(n => Harness.timed(spark, n, sfDir).left.foreach(report(n)))
 
-    // Failed queries record -1 (never a time-to-failure masquerading as a
-    // fast run) and are listed in `failed`.
-    //
-    // Cache-clear, checkpoint-block reap, and an explicit GC happen BEFORE
-    // the timer starts: with ~400 queries in one JVM, collections of the
-    // PREVIOUS query's garbage otherwise land inside the next query's
-    // measured window, inflating the whole suite ~25-30% in a way that
-    // scales with suite LENGTH, not query cost (observed round-4 ->
-    // round-5: uniform inflation on unchanged queries as the surface grew
-    // 152 -> 198; round-8 -> round-9: +8%/query as it grew 314 -> 379).
+    // Failed queries record -1 and are listed in `failed`; the reap and
+    // GC happen before the timer starts (Harness.timed).
     //
     // -Dgraft.bench.reps=N (default 1) measures each query N times and
     // records the per-query MEDIAN — the stability mode for committed
@@ -96,14 +44,9 @@ object Bench {
     val reps = math.max(1, sys.props.getOrElse("graft.bench.reps", "1").toInt)
     val results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
       val times = (1 to reps).flatMap { _ =>
-        reap()
-        val t0 = System.nanoTime()
-        val ok = try {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          true
-        } catch { case _: Throwable => false }
-        if (ok) Some((System.nanoTime() - t0) / 1e9) else None
+        val r = Harness.timed(spark, name, sfDir)
+        r.left.foreach(report(name))
+        r.toOption
       }
       // median of the successful reps (upper-median for even counts);
       // failed iff every rep failed

@@ -1,12 +1,11 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Stage-level profile of single queries: `BenchProfile <sfDir> <q1,q2,..> [reps]`.
   *
-  * Same session shape as Bench (noop sink, pre-timer reap) but with a
+  * Same session shape and timed run as Bench ([[Harness]]) but with a
   * listener that attributes the wall clock to stages: per stage the
   * submit→complete wall, task-time sum, CPU sum, GC sum, shuffle
   * read/write bytes and row counts. The gap between the query wall and
@@ -26,17 +25,7 @@ object BenchProfile {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     val stages = mutable.ArrayBuffer[StageRec]()
     val submitTimes = mutable.Map[(Int, Int), Long]()
@@ -70,23 +59,14 @@ object BenchProfile {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    // warmup (matches Bench)
-    try SparkEntry.queries("q01_pricing_summary")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save() catch { case _: Throwable => () }
+    Harness.timed(spark, "q01_pricing_summary", sfDir) // warmup, as Bench
 
     def mb(b: Long): String = f"${b / 1048576.0}%8.1f"
     names.foreach { name =>
       (1 to reps).foreach { rep =>
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        System.gc()
         stages.clear(); submitTimes.clear()
         collect = true
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
+        val wall = Harness.timed(spark, name, sfDir).fold(e => throw e, identity)
         collect = false
         // merge overlapping stage intervals → executor-occupied wall
         val iv = stages.map(s => (s.submitMs, s.completeMs)).sortBy(_._1)

@@ -1,15 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Prints the formatted physical plan of selected queries for audits. */
+/** Prints the formatted physical plan of selected queries for audits:
+  * `PlanAudit <q1,q2,..> [sfDir]`, in the Bench session shape. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     args(0).split(",").foreach { name =>
       println(s"===== $name =====")

@@ -272,6 +272,9 @@ object RecoveryProof {
     t
   }
 
+  // Not Harness.session: this proof needs a `local-cluster` master and
+  // the checkpoint-policy confs, and folding them in would make the shared
+  // factory branch on its caller.
   private def session(master: String, policy: String): SparkSession = {
     val b = SparkSession.builder()
       .master(master)

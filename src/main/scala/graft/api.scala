@@ -65,9 +65,6 @@ object api {
   /** Policy-selected lineage cut for iterative loops:
     * `df.cutLineage()` via `import graft.plans.CheckpointPolicy._`. */
   val checkpointPolicy: plans.CheckpointPolicy.type = plans.CheckpointPolicy
-  /** Plan-fingerprint result cache: semantically-equal frames built at
-    * different call sites share one parquet materialization. */
-  val resultCache: plans.ResultCache.type = plans.ResultCache
   /** Secondary-sort streaming folds for non-prefix-expressible per-key
     * recurrences (clamped balances, EWMA/Holt levels, SPRT stopping):
     * `foldGroups` (one output row per key) / `scanGroups` (one output

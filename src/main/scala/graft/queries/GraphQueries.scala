@@ -465,7 +465,7 @@ object GraphQueries {
     // identically, so exchange/stage reuse computes the distinct once,
     // while an eager checkpoint here executed the subtree at
     // plan-construction time on every invocation and measured ~25%
-    // slower warm (3-rep BenchOne medians 3.5 s vs 2.7 s at sf0.1).
+    // slower warm (3-rep single-query medians 3.5 s vs 2.7 s at sf0.1).
     QueryDef(
       "q254_link_prediction",
       (s, dir) => {

@@ -9,6 +9,10 @@ import org.apache.spark.sql.execution.joins.CartesianProductExec
   * 1-row build side) or bounded probe sets; anything that degrades to
   * CartesianProductExec must be listed here with its justification or
   * fixed. Streaming queries are excluded (their fn executes lifetimes).
+  *
+  * Also holds the harness lints: `Harness.session` is the only session
+  * builder in `src/main` (RecoveryProof's local-cluster proof aside), and
+  * it pins ANSI, UTC, the extensions and AQE's 8×cpus starting partitions.
   */
 class JoinLintSpec extends SparkSpec {
 
@@ -31,5 +35,26 @@ class JoinLintSpec extends SparkSpec {
     assert(offenders.isEmpty,
       "non-broadcast cartesian products (|l|x|r| row materialization at " +
         "scale):\n" + offenders.mkString("\n"))
+  }
+
+  test("Harness.session is the only SparkSession builder in src/main") {
+    import scala.jdk.CollectionConverters._
+    val allowed = Set("Harness.scala", "RecoveryProof.scala")
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.getFileName.toString == "Harness.scala"))
+    val drifted = files.filterNot(f => allowed(f.getFileName.toString))
+      .filter(f => java.nio.file.Files.readString(f).contains("SparkSession.builder"))
+    assert(drifted.isEmpty, s"private session builders: ${drifted.mkString(", ")}")
+  }
+
+  test("the harness session pins ANSI, UTC, the extensions and 8x cpus initial partitions") {
+    val conf = spark.sparkContext.getConf
+    assert(conf.get("spark.master") == "local[4]")
+    assert(conf.getOption("spark.sql.ansi.enabled").contains("true"))
+    assert(conf.getOption("spark.sql.session.timeZone").contains("UTC"))
+    assert(conf.getOption("spark.sql.extensions").contains("graft.GraftExtensions"))
+    assert(conf.getOption(
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum").contains("32"))
   }
 }

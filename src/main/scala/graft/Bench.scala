@@ -53,33 +53,45 @@ object Bench {
       val t = if (times.isEmpty) -1.0 else times.sorted.apply(times.size / 2)
       (name, t, times.nonEmpty)
     }
-    // The one-line JSON must fit the driver's 2000-byte stdout tail-capture
-    // window (round-4 postmortem: 152 full-precision doubles keyed by long
-    // names overflowed it -> "parsed": null; round-5 postmortem: even
-    // ms-rounded short keys overflow at 188 queries). The line therefore
-    // self-limits to a hard byte budget: failures first, then the slowest
-    // queries, inline until the budget is spent; the full-name
-    // full-precision map ALWAYS goes to the BENCH_DETAIL.json sidecar.
-    def ms(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
-    val failed = results.collect { case (k, _, false) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
     val total = results.collect { case (_, v, true) => v }.sum
     val detail = results.map { case (k, v, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val failed = results.collect { case (k, _, false) => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),
       s"""{"sf":"$sfDir","reps":$reps,"total":$total,"queries":$detail,"failed":$failed}"""
         .getBytes("UTF-8"))
-    val prefix = s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size},"reps":$reps,"detail":"BENCH_DETAIL.json","queries":{"""
-    val suffix = s"""},"failed":$failed,"sf":"$sfDir"}"""
-    val budget = 1900 - prefix.length - suffix.length
-    val ordered = results
-      .map { case (k, v, _) => ("\"" + k.takeWhile(_ != '_') + "\":" + ms(v), v) }
-      .sortBy { case (_, v) => if (v < 0) Double.MinValue else -v }
-    val kept = ordered.foldLeft((List.empty[String], 0)) {
-      case ((acc, used), (e, _)) if used + e.length + 1 <= budget => (e :: acc, used + e.length + 1)
-      case (st, _) => st
-    }._1.reverse
-    println(prefix + kept.mkString(",") + suffix)
+    println(stdoutLine(results, total, reps, sfDir))
     spark.stop()
+  }
+
+  /** The last stdout line for `(query, seconds, succeeded)` results.
+    *
+    * It must fit the driver's 2000-byte stdout tail-capture window
+    * (round-4 postmortem: 152 full-precision doubles keyed by long names
+    * overflowed it -> "parsed": null; round-5 postmortem: even ms-rounded
+    * short keys overflow at 188 queries). The line therefore self-limits
+    * to a hard 1900-byte budget that the `failed` names and the `queries`
+    * map share: failed names first, then failures and the slowest queries
+    * inline until the budget is spent. The full-name full-precision map
+    * and the full failure list ALWAYS go to the BENCH_DETAIL.json sidecar. */
+  def stdoutLine(results: Seq[(String, Double, Boolean)], total: Double,
+      reps: Int, sfDir: String): String = {
+    def ms(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
+    // entries that fit `budget` (one separator byte each), in order
+    def fit(entries: Seq[String], budget: Int): List[String] =
+      entries.foldLeft((List.empty[String], 0)) {
+        case ((acc, used), e) if used + e.length + 1 <= budget => (e :: acc, used + e.length + 1)
+        case (st, _) => st
+      }._1.reverse
+    val prefix = s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size},"reps":$reps,"detail":"BENCH_DETAIL.json","queries":{"""
+    val budget = 1900 - prefix.length - s"""},"failed":[],"sf":"$sfDir"}""".length
+    val failed = fit(results.collect { case (k, _, false) => "\"" + k + "\"" }, budget)
+    val suffix = s"""},"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir"}"""
+    val ordered = results
+      .sortBy { case (_, v, _) => if (v < 0) Double.MinValue else -v }
+      .map { case (k, v, _) => "\"" + k.takeWhile(_ != '_') + "\":" + ms(v) }
+    val kept = fit(ordered, budget - failed.map(_.length + 1).sum)
+    prefix + kept.mkString(",") + suffix
   }
 }

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * }}}
   *
   * Cluster deployments should also set the two engine-wide knobs:
-  *   - `graft.checkpoint.policy` = `reliable` (or `parquet`) so iterative
+  *   - `graft.checkpoint.policy` = `reliable` so iterative
   *     operators survive executor loss — see [[graft.plans.CheckpointPolicy]];
   *   - AQE on (default) — the skew helpers in [[skew]] document when
   *     manual salting still beats AQE's runtime splitting.

@@ -263,7 +263,7 @@ object TextDedup {
     * so callers and harnesses need no cache hygiene, and a suite running
     * many queries accumulates zero pins from this loop. Locally that is
     * `localCheckpoint`; a cluster sets `graft.checkpoint.policy=reliable`
-    * (or `parquet`) so an executor loss mid-iteration recomputes nothing
+    * so an executor loss mid-iteration recomputes nothing
     * and loses nothing — local checkpoint blocks are executor-resident and
     * non-replicated, which at 1000 executors makes a loss per run a
     * near-certainty.

@@ -29,23 +29,13 @@ import org.apache.spark.sql.DataFrame
   *     and asserts the CC / k-core outputs are byte-identical to an
   *     undisturbed run — measured results in SCALE.md §"Executor-loss
   *     recovery".
-  *   - `graft.checkpoint.policy=parquet`: write-and-reread a parquet
-  *     round-trip under `graft.checkpoint.dir`. Same durability as
-  *     `reliable` with two extras clusters care about: columnar compression
-  *     (checkpoint files are raw serialized rows) and downstream scans that
-  *     re-enter the normal FileScan path (splittable, column-prunable).
   *
-  * All three are pin-neutral — none registers anything in the
-  * cacheManager, so PinHygieneSpec's invariant holds under every policy.
+  * Both are pin-neutral — neither registers anything in the
+  * cacheManager, so PinHygieneSpec's invariant holds under either policy.
   *
   * Cleanup: reliable-checkpoint RDD files are removed by the
   * ContextCleaner when `spark.cleaner.referenceTracking.cleanCheckpoints`
-  * is set, else at application end; parquet spills live under a
-  * PER-APPLICATION subdir `graft.checkpoint.dir/<appId>/spill_<uuid>` —
-  * a best-effort listener deletes the whole appId subtree when the
-  * SparkContext stops, and a warehouse janitor can reap any survivor by
-  * matching the appId against the cluster manager's dead-application
-  * list (each spill is self-contained, no cross-references).
+  * is set, else at application end.
   */
 object CheckpointPolicy {
 
@@ -55,15 +45,13 @@ object CheckpointPolicy {
   sealed trait Policy
   case object Local extends Policy
   case object Reliable extends Policy
-  case object ParquetSpill extends Policy
 
   def resolve(df: DataFrame): Policy =
     df.sparkSession.conf.get(PolicyKey, "local") match {
       case "local" => Local
       case "reliable" => Reliable
-      case "parquet" => ParquetSpill
       case other => throw new IllegalArgumentException(
-        s"$PolicyKey must be local|reliable|parquet, got '$other'")
+        s"$PolicyKey must be local|reliable, got '$other'")
     }
 
   // ── Test-visible pre-cut plan registry ────────────────────────────
@@ -96,7 +84,7 @@ object CheckpointPolicy {
   def stopRecordingCutPlans(): Unit = cutPlanRecorder.remove()
 
   /** Materialize `df` and truncate its lineage under the session's
-    * configured policy. Eager in all three modes — iterative callers rely
+    * configured policy. Eager in both modes — iterative callers rely
     * on the cut frame being computed exactly once. */
   def materialize(df: DataFrame): DataFrame = {
     val rec = cutPlanRecorder.get
@@ -125,41 +113,6 @@ object CheckpointPolicy {
       df.persist()
       try df.checkpoint(true)
       finally df.unpersist(blocking = false)
-    case ParquetSpill =>
-      val dir = df.sparkSession.conf.get(DirKey, null)
-      require(dir != null, s"$PolicyKey=parquet needs $DirKey")
-      val spark = df.sparkSession
-      val appRoot = s"$dir/${spark.sparkContext.applicationId}"
-      registerSpillReaper(spark, appRoot)
-      val path = s"$appRoot/spill_${java.util.UUID.randomUUID()}"
-      df.write.parquet(path)
-      spark.read.parquet(path)
-  }
-
-  // One reaper listener per (SparkContext, appRoot): deletes the whole
-  // per-application spill subtree when the application ends. Best-effort
-  // — a hard driver kill skips it, which is exactly the case the
-  // appId-named subdir exists for (janitor reaps by dead appId).
-  private val reaperRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def registerSpillReaper(
-      spark: org.apache.spark.sql.SparkSession, appRoot: String): Unit = {
-    val key = s"${spark.sparkContext.applicationId}:$appRoot"
-    if (reaperRegistered.add(key)) {
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              end: org.apache.spark.scheduler.SparkListenerApplicationEnd)
-              : Unit = {
-            try {
-              val p = new org.apache.hadoop.fs.Path(appRoot)
-              val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              fs.delete(p, true)
-            } catch { case _: Exception => () } // best-effort only
-          }
-        })
-    }
   }
 
   /** `df.cutLineage()` — the call sites' spelling of [[materialize]]. */

@@ -86,11 +86,7 @@ object AuditQueries {
     QueryDef(
       "q142_bucketed_join",
       (s, dir) => {
-        val root = java.nio.file.Paths.get(
-          sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_bucketed").toString
-        val fs = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
+        val root = Scratch.fresh(s, "graft_bucketed")
         s.sql("DROP TABLE IF EXISTS bq_orders")
         s.sql("DROP TABLE IF EXISTS bq_events")
         Materialize.bucketedTable(

@@ -9,12 +9,6 @@ import graft.sources.{Materialize, Tables}
   * gap-based sessionization (q50). */
 object SinkQueries {
 
-  /** Fixed, per-name scratch dir under java.io.tmpdir: write modes are
-    * Overwrite, so repeated runs reuse one tree instead of accumulating. */
-  private def scratchDir(name: String): String =
-    java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), name).toString
-
   val defs: Seq[QueryDef] = Seq(
 
     // S3 table sink exercised end-to-end INSIDE the gate: materialize a
@@ -30,10 +24,10 @@ object SinkQueries {
           col("o_orderstatus"),
           to_date(col("o_orderdate")).as("order_date"),
           year(col("o_orderdate")).cast("int").as("order_year"))
-        // fixed scratch dir, overwritten per run: repeated invocations
+        // fixed scratch dir, wiped per run: repeated invocations
         // reuse the same tree instead of accumulating orphaned temp dirs
         // (deleteOnExit can't remove non-empty directories)
-        val out = scratchDir("graft_sink")
+        val out = Scratch.fresh(s, "graft_sink")
         Materialize.table(mart, out, "GOLD", "orders_mart", partitionBy = Seq("order_year"))
         s.read.parquet(s"$out/GOLD/orders_mart")
           .groupBy(col("order_year").cast("long").as("order_year"), col("o_orderstatus"))
@@ -64,7 +58,7 @@ object SinkQueries {
       "q62_jsonl_roundtrip",
       (s, dir) => {
         val o = Tables.orders(s, dir)
-        val out = scratchDir("graft_jsonl")
+        val out = Scratch.fresh(s, "graft_jsonl")
         o.select(col("o_orderkey"), col("o_orderstatus"),
             date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"),
             col("o_totalprice"))
@@ -104,7 +98,7 @@ object SinkQueries {
       "q63_csv_roundtrip",
       (s, dir) => {
         val o = Tables.orders(s, dir)
-        val out = scratchDir("graft_csv")
+        val out = Scratch.fresh(s, "graft_csv")
         o.select(col("o_orderkey"), col("o_custkey"),
             date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"),
             col("o_totalprice"))
@@ -143,7 +137,7 @@ object SinkQueries {
     QueryDef(
       "q127_orc_roundtrip",
       (s, dir) => {
-        val out = scratchDir("graft_orc")
+        val out = Scratch.fresh(s, "graft_orc")
         Tables.lineitem(s, dir)
           .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
             dec6(col("l_extendedprice")).as("price"))
@@ -174,7 +168,7 @@ object SinkQueries {
     QueryDef(
       "q147_malformed_csv",
       (s, dir) => {
-        val out = scratchDir("graft_badcsv")
+        val out = Scratch.fresh(s, "graft_badcsv")
         Tables.orders(s, dir)
           .selectExpr("""concat(o_orderkey, ',',
             CASE WHEN o_orderkey % 13 = 0 THEN 'notanumber'
@@ -276,9 +270,7 @@ object SinkQueries {
     QueryDef(
       "q163_incremental_agg_state",
       (s, dir) => {
-        val root = scratchDir("graft_agg_state")
-        val rp = new org.apache.hadoop.fs.Path(root)
-        rp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(rp, true)
+        val root = Scratch.fresh(s, "graft_agg_state")
         val o = Tables.orders(s, dir).select(
           to_date(col("o_orderdate")).as("day"), col("o_orderkey"),
           (col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(18, 2))

@@ -1,9 +1,11 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import graft.operators.IncrementalMerge
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
 import graft.sources.Tables
+import graft.streaming.Streams
 import graft.plans.CheckpointPolicy.DataFrameCutOps
 
 /** Streaming surface gated through the SAME oracle as the batch side:
@@ -20,34 +22,16 @@ import graft.plans.CheckpointPolicy.DataFrameCutOps
   * exactly where the previous run stopped — the restart-per-slice below
   * is deliberately the HARD path (recovery across three separate query
   * lifetimes), not a convenience.
+  *
+  * Every gate runs through [[runGate]]: a gate names its slices, its
+  * stream shape and its read-back; the runner owns the scratch root, the
+  * spool/ckpt layout, the lifetime grouping and the AvailableNow run.
   */
 object StreamQueries {
 
-  private def scratchDir(name: String): String =
-    java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), name).toString
-
-  /** Bench knob: `-Dgraft.stream.lifetimes=1` collapses the multi-restart
-    * streaming gates (q116/q134/q151/q153/q154/q228/q259/q262/q268/q278/
-    * q281/q282/q296 — all but q79, whose latest-wins merge SEMANTICS
-    * depend on slice-per-batch ordering) to the minimum lifetimes that
-    * still produce sink output — one lifetime for all data slices, plus
-    * one flush lifetime where a watermark push is needed. The multi-lifetime ceremony (checkpointed recovery across
-    * restarts, state replayed nowhere) is the POINT of these gates, so
-    * Verify and the default path always run the full topology; the bench
-    * sets the knob so the driver's number measures engine throughput,
-    * not state-store snapshot/open/close file ceremony (~3 s per
-    * lifetime of fixed cost at local[32], flat in data size). */
-  private def singleLifetime: Boolean =
-    sys.props.get("graft.stream.lifetimes").contains("1")
-
-  /** Lifetime grouping under the knob: full ceremony = one slice-writer
-    * per streaming lifetime; collapsed = all data writers before one
-    * lifetime, all flush writers before a second. */
-  private def lifetimeGroups(data: Seq[() => Unit],
-      flush: Seq[() => Unit]): Seq[Seq[() => Unit]] =
-    if (singleLifetime) Seq(data, flush).filter(_.nonEmpty)
-    else (data ++ flush).map(Seq(_))
+  /** One query lifetime's input: frames landed at paths under the gate
+    * root before the lifetime starts. */
+  private type Slice = Seq[(String, DataFrame)]
 
   /** Run the streaming section at a fixed state-partition count.
     *
@@ -59,11 +43,190 @@ object StreamQueries {
     * kB-scale state at this sf — the gates are parallelism-independent
     * (the full gate passes at CPUS=8 and 32), so this changes only the
     * fixed overhead, never results. Restores the session value after. */
-  private def withStatePartitions[A](
-      s: org.apache.spark.sql.SparkSession, n: Int)(f: => A): A = {
+  private def withStatePartitions[A](s: SparkSession, n: Int)(f: => A): A = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", n.toString)
     try f finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  /** The one runner behind every streaming gate. Wipes the gate's
+    * scratch root (checkpoint offsets, state and sink output must not
+    * leak between runs), then runs one checkpointed query lifetime per
+    * slice: the lifetime lands its slice, then drains everything landed
+    * so far with one AvailableNow run of `stream(root, lifetime)`,
+    * checkpointed at `root/ckpt`. Returns the root and the lifetime count.
+    *
+    * Bench knob: `-Dgraft.stream.lifetimes=1` collapses a `collapsible`
+    * gate to the minimum lifetimes that still produce sink output — one
+    * lifetime for all `data` slices, plus one for all `flush` slices
+    * where a watermark push is needed. q79 is not collapsible: its
+    * latest-wins merge SEMANTICS depend on slice-per-batch ordering. The
+    * multi-lifetime ceremony (checkpointed recovery across restarts,
+    * state replayed nowhere) is the POINT of these gates, so Verify and
+    * the default path always run the full topology; the bench sets the
+    * knob so the driver's number measures engine throughput, not
+    * state-store snapshot/open/close file ceremony (~3 s per lifetime of
+    * fixed cost at local[32], flat in data size). */
+  private def runGate(s: SparkSession, scratch: String, data: Seq[Slice],
+      flush: Seq[Slice] = Nil, collapsible: Boolean = true)(
+      stream: (String, Int) => DataStreamWriter[Row]): (String, Int) = {
+    val root = Scratch.fresh(s, scratch)
+    val lifetimes =
+      if (collapsible && sys.props.get("graft.stream.lifetimes").contains("1"))
+        Seq(data.flatten, flush.flatten).filter(_.nonEmpty)
+      else data ++ flush
+    withStatePartitions(s, 8) {
+      lifetimes.zipWithIndex.foreach { case (slice, i) =>
+        slice.foreach { case (path, df) =>
+          df.write.mode("overwrite").parquet(s"$root/$path")
+        }
+        stream(root, i)
+          .option("checkpointLocation", s"$root/ckpt")
+          .trigger(Trigger.AvailableNow())
+          .start()
+          .awaitTermination()
+      }
+    }
+    (root, lifetimes.size)
+  }
+
+  /** Frame i lands at `spool/batch_i`, one slice per frame. */
+  private def spooled(frames: Seq[DataFrame]): Seq[Slice] =
+    frames.zipWithIndex.map { case (df, i) => Seq(s"spool/batch_$i" -> df) }
+
+  /** `ev` in two chronological slices cut at 2024-01-10. */
+  private def halves(ev: DataFrame): Seq[DataFrame] = {
+    val cut = lit("2024-01-10 00:00:00").cast("timestamp")
+    Seq(ev.where(col("ts") < cut), ev.where(col("ts") >= cut))
+  }
+
+  /** The sentinel row's `ts`: two days past the data. */
+  private def flushTs: Column = lit("2024-02-02 00:00:00").cast("timestamp").as("ts")
+
+  /** `halves(ev)` as data slices, plus a flush slice of one sentinel row
+    * built from `sentinel` (which carries [[flushTs]]): it pushes the
+    * watermark past every real row, so append mode emits the tail. */
+  private def halvesAndFlush(ev: DataFrame, sentinel: Column*)
+      : (Seq[Slice], Seq[Slice]) = {
+    val slices = spooled(halves(ev) :+ ev.limit(1).select(sentinel: _*))
+    (slices.init, Seq(slices.last))
+  }
+
+  /** Events with exact integer cents, in three chronological slices cut
+    * at 2024-01-08 and 2024-01-20. */
+  private def centsTerciles(s: SparkSession, dir: String): Seq[DataFrame] = {
+    val ev = Tables.events(s, dir)
+      .select(col("event_id"), col("ts"), col("event_type"),
+        (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2))
+          * 100).cast("long").as("cents"))
+    val cut1 = lit("2024-01-08 00:00:00").cast("timestamp")
+    val cut2 = lit("2024-01-20 00:00:00").cast("timestamp")
+    Seq(
+      ev.where(col("ts") < cut1),
+      ev.where(col("ts") >= cut1 && col("ts") < cut2),
+      ev.where(col("ts") >= cut2))
+  }
+
+  /** The spool as a stream that drains each lifetime in ONE micro-batch
+    * (AvailableNow otherwise chunks at 1000 files). */
+  private def wholeSpool(s: SparkSession, schema: StructType,
+      root: String): DataFrame =
+    s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1000000")
+      .parquet(s"$root/spool/*")
+
+  /** Interval-join sides: even events left, odd events right. */
+  private def joinSides(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val ev = Tables.events(s, dir)
+      .select(col("event_id"), col("user_id"), col("ts"))
+    val left = ev.where(col("event_id") % 2 === 0)
+      .select(col("event_id").as("l_id"), col("user_id").as("l_user"),
+        col("ts").as("l_ts"))
+    val right = ev.where(col("event_id") % 2 === 1)
+      .select(col("event_id").as("r_id"), col("user_id").as("r_user"),
+        col("ts").as("r_ts"))
+    (left, right)
+  }
+
+  /** Three slices per side; slice i of side `p` ("l" or "r") is the rows
+    * where `part(p, i)` holds, landed at `p/batch_i`. */
+  private def joinSlices(left: DataFrame, right: DataFrame)(
+      part: (String, Int) => Column): Seq[Slice] =
+    (0 until 3).map(i => Seq(
+      s"l/batch_$i" -> left.where(part("l", i)),
+      s"r/batch_$i" -> right.where(part("r", i))))
+
+  /** Same-user interval join of the `l/` and `r/` spools: the right event
+    * lands within [l_ts, l_ts + 10 min]. */
+  private def joinStream(s: SparkSession, root: String, left: DataFrame,
+      right: DataFrame, watermark: String,
+      joinType: String = "inner"): DataFrame =
+    Streams.intervalJoinStream(
+      s.readStream.schema(left.schema).parquet(s"$root/l/*"),
+      s.readStream.schema(right.schema).parquet(s"$root/r/*"),
+      "l_user", "r_user", "l_ts", "r_ts",
+      watermark = watermark, maxDelay = "10 MINUTES", joinType = joinType)
+
+  /** Append-mode parquet file sink at `root/out`. */
+  private def toOut(df: DataFrame, root: String): DataStreamWriter[Row] =
+    df.writeStream.format("parquet").option("path", s"$root/out")
+      .outputMode("append")
+
+  /** q228/q278: the outer interval join over chronological day-of-month
+    * terciles, then two FLUSH lifetimes that append far-future sentinel
+    * rows on BOTH sides (the global watermark is the min): the first
+    * pushes the watermark past every real l_ts + maxDelay, the second
+    * forces the extra micro-batch in which the engine emits the last
+    * expired outer rows. Sentinels (user -999, a day apart so they can't
+    * match each other) must be filtered by the caller. Returns the root. */
+  private def outerJoinGate(s: SparkSession, dir: String, scratch: String,
+      joinType: String, out: Seq[String]): String = {
+    import s.implicits._
+    val (left, right) = joinSides(s, dir)
+    def tercile(c: Column, i: Int) =
+      if (i == 0) dayofmonth(c) <= 10
+      else if (i == 1) dayofmonth(c) > 10 && dayofmonth(c) <= 20
+      else dayofmonth(c) > 20
+    val flush: Seq[Slice] = (0 until 2).map { f =>
+      val day = 5 + 5 * f
+      Seq(
+        s"l/flush_$f" -> Seq((-1000000L - f, -999L,
+            java.sql.Timestamp.valueOf(f"2024-02-$day%02d 00:00:00")))
+          .toDF("l_id", "l_user", "l_ts"),
+        s"r/flush_$f" -> Seq((-2000000L - f, -999L,
+            java.sql.Timestamp.valueOf(f"2024-02-${day + 1}%02d 00:00:00")))
+          .toDF("r_id", "r_user", "r_ts"))
+    }
+    val data = joinSlices(left, right)((p, i) => tercile(col(s"${p}_ts"), i))
+    runGate(s, scratch, data, flush) { (root, _) =>
+      toOut(joinStream(s, root, left, right, "1 hour", joinType)
+        .select(out.map(col): _*), root)
+    }._1
+  }
+
+  /** q116/q281: a watermarked `w` window aggregation per event type in
+    * append mode over the two halves, then the flush sentinel. */
+  private def windowGate(scratch: String, w: Column)
+      : (SparkSession, String) => DataFrame = (s, dir) => {
+    val ev = Tables.events(s, dir)
+      .select(col("event_id"), col("ts"), col("event_type"), col("value"))
+    val (data, flush) = halvesAndFlush(ev, lit(-1L).as("event_id"), flushTs,
+      lit("flush").as("event_type"), lit(0.0d).as("value"))
+    val (root, _) = runGate(s, scratch, data, flush) { (root, _) =>
+      toOut(s.readStream.schema(ev.schema).parquet(s"$root/spool/*")
+        .withWatermark("ts", "1 minute")
+        .groupBy(w, col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
+            .as("sum_value"))
+        .select(col("window.start").as("window_start"), col("event_type"),
+          col("n_events"), col("sum_value")), root)
+    }
+    s.read.parquet(s"$root/out")
+      .where(col("event_type") =!= "flush")
+      .select(col("window_start"), col("event_type"), col("n_events"),
+        col("sum_value").cast("double").as("sum_value"))
+      .orderBy(col("window_start"), col("event_type"))
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -76,15 +239,6 @@ object StreamQueries {
     QueryDef(
       "q79_stream_merge_parity",
       (s, dir) => {
-        val root = scratchDir("graft_stream_gate")
-        // checkpoint offsets must not leak between runs: wipe the tree
-        val rp = new org.apache.hadoop.fs.Path(root)
-        val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(rp, true)
-        val spool  = s"$root/spool"
-        val target = s"$root/target"
-        val ckpt   = s"$root/ckpt"
-
         val ev = Tables.events(s, dir).select(
           col("event_id"), col("user_id"), col("event_type"), col("value"),
           to_date(col("ts")).as("event_date"))
@@ -96,23 +250,13 @@ object StreamQueries {
               .withColumn("value", col("value") + lit(1000.0d))),
           ev.where(col("event_id") % 3 === 2))
 
-        withStatePartitions(s, 8) {
-        slices.zipWithIndex.foreach { case (slice, i) =>
-          slice.write.mode("overwrite").parquet(s"$spool/batch_$i")
-          val q = s.readStream.schema(ev.schema).parquet(s"$spool/*")
-            .writeStream
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-              IncrementalMerge.mergeIntoPartitionedTarget(s, target, batch,
-                Seq("event_id"), "event_date",
-                stagePath = s"$root/stage_$id")
-            }
-            .start()
-          q.awaitTermination()
-        } }
+        val (root, _) = runGate(s, "graft_stream_gate", spooled(slices),
+            collapsible = false) { (root, _) =>
+          Streams.mergeSink(s.readStream.schema(ev.schema).parquet(s"$root/spool/*"),
+            s, s"$root/target", Seq("event_id"), "event_date", s"$root/ckpt")
+        }
 
-        s.read.parquet(target)
+        s.read.parquet(s"$root/target")
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"), col("event_date"))
           .orderBy(col("event_id"))
@@ -139,59 +283,7 @@ object StreamQueries {
     // state is bounded by (open windows × event types), never the stream.
     QueryDef(
       "q116_stream_window_parity",
-      (s, dir) => {
-        val root = scratchDir("graft_stream_win")
-        val rp = new org.apache.hadoop.fs.Path(root)
-        val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(rp, true)
-        val spool = s"$root/spool"
-        val out   = s"$root/out"
-        val ckpt  = s"$root/ckpt"
-
-        val ev = Tables.events(s, dir)
-          .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-        val cut = lit("2024-01-10 00:00:00").cast("timestamp")
-        val sentinel = ev.limit(1).select(
-          lit(-1L).as("event_id"), lit("2024-02-02 00:00:00").cast("timestamp").as("ts"),
-          lit("flush").as("event_type"), lit(0.0d).as("value"))
-        val slices = Seq(
-          ev.where(col("ts") < cut),
-          ev.where(col("ts") >= cut),
-          sentinel)
-
-        def runOnce(): Unit = {
-          val q = s.readStream.schema(ev.schema).parquet(s"$spool/*")
-            .withWatermark("ts", "1 minute")
-            .groupBy(window(col("ts"), "6 hours"), col("event_type"))
-            .agg(count(lit(1)).as("n_events"),
-              sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-                .as("sum_value"))
-            .select(col("window.start").as("window_start"), col("event_type"),
-              col("n_events"), col("sum_value"))
-            .writeStream
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        val writers: Seq[() => Unit] = slices.zipWithIndex.map { case (sl, i) =>
-          () => sl.write.mode("overwrite").parquet(s"$spool/batch_$i")
-        }
-        withStatePartitions(s, 8) {
-          // last slice is the watermark-flush sentinel — its own lifetime
-          lifetimeGroups(writers.init, Seq(writers.last))
-            .foreach { g => g.foreach(_.apply()); runOnce() }
-        }
-
-        s.read.parquet(out)
-          .where(col("event_type") =!= "flush")
-          .select(col("window_start"), col("event_type"), col("n_events"),
-            col("sum_value").cast("double").as("sum_value"))
-          .orderBy(col("window_start"), col("event_type"))
-      },
+      windowGate("graft_stream_win", window(col("ts"), "6 hours")),
       Some("""
         SELECT make_timestamp((((CAST(epoch_us(ts) AS BIGINT) // 1000000) // 21600) * 21600)
                               * 1000000) AS window_start,
@@ -213,60 +305,7 @@ object StreamQueries {
     // x ∈ 0..2 — epoch-aligned exactly like Spark's window()).
     QueryDef(
       "q281_stream_sliding_window",
-      (s, dir) => {
-        val root = scratchDir("graft_stream_slide")
-        val rp = new org.apache.hadoop.fs.Path(root)
-        val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(rp, true)
-        val spool = s"$root/spool"
-        val out   = s"$root/out"
-        val ckpt  = s"$root/ckpt"
-
-        val ev = Tables.events(s, dir)
-          .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-        val cut = lit("2024-01-10 00:00:00").cast("timestamp")
-        val sentinel = ev.limit(1).select(
-          lit(-1L).as("event_id"),
-          lit("2024-02-02 00:00:00").cast("timestamp").as("ts"),
-          lit("flush").as("event_type"), lit(0.0d).as("value"))
-        val slices = Seq(
-          ev.where(col("ts") < cut),
-          ev.where(col("ts") >= cut),
-          sentinel)
-
-        def runOnce(): Unit = {
-          val q = s.readStream.schema(ev.schema).parquet(s"$spool/*")
-            .withWatermark("ts", "1 minute")
-            .groupBy(window(col("ts"), "6 hours", "2 hours"), col("event_type"))
-            .agg(count(lit(1)).as("n_events"),
-              sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-                .as("sum_value"))
-            .select(col("window.start").as("window_start"), col("event_type"),
-              col("n_events"), col("sum_value"))
-            .writeStream
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        val writers: Seq[() => Unit] = slices.zipWithIndex.map { case (sl, i) =>
-          () => sl.write.mode("overwrite").parquet(s"$spool/batch_$i")
-        }
-        withStatePartitions(s, 8) {
-          // last slice is the watermark-flush sentinel — its own lifetime
-          lifetimeGroups(writers.init, Seq(writers.last))
-            .foreach { g => g.foreach(_.apply()); runOnce() }
-        }
-
-        s.read.parquet(out)
-          .where(col("event_type") =!= "flush")
-          .select(col("window_start"), col("event_type"), col("n_events"),
-            col("sum_value").cast("double").as("sum_value"))
-          .orderBy(col("window_start"), col("event_type"))
-      },
+      windowGate("graft_stream_slide", window(col("ts"), "6 hours", "2 hours")),
       Some("""
         WITH fan AS (
           SELECT make_timestamp(((((CAST(epoch_us(ts) AS BIGINT) // 1000000)
@@ -295,54 +334,23 @@ object StreamQueries {
     QueryDef(
       "q282_stream_session_window",
       (s, dir) => {
-        val root = scratchDir("graft_stream_sesswin")
-        val rp = new org.apache.hadoop.fs.Path(root)
-        val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(rp, true)
-        val spool = s"$root/spool"
-        val out   = s"$root/out"
-        val ckpt  = s"$root/ckpt"
-
         val ev = Tables.events(s, dir)
           .select(col("event_id"), col("ts"), col("user_id"),
             (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6))
               * 1000000).cast("long").as("micro"))
-        val cut = lit("2024-01-10 00:00:00").cast("timestamp")
-        val sentinel = ev.limit(1).select(
-          lit(-1L).as("event_id"),
-          lit("2024-02-02 00:00:00").cast("timestamp").as("ts"),
+        val (data, flush) = halvesAndFlush(ev, lit(-1L).as("event_id"), flushTs,
           lit(-999L).as("user_id"), lit(0L).as("micro"))
-        val slices = Seq(
-          ev.where(col("ts") < cut),
-          ev.where(col("ts") >= cut),
-          sentinel)
 
-        def runOnce(): Unit = {
-          val q = s.readStream.schema(ev.schema).parquet(s"$spool/*")
+        val (root, _) = runGate(s, "graft_stream_sesswin", data, flush) { (root, _) =>
+          toOut(s.readStream.schema(ev.schema).parquet(s"$root/spool/*")
             .withWatermark("ts", "1 minute")
             .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
             .agg(count(lit(1)).as("n_events"), sum(col("micro")).as("micro_sum"))
             .select(col("session_window.start").as("session_start"),
-              col("user_id"), col("n_events"), col("micro_sum"))
-            .writeStream
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        val writers: Seq[() => Unit] = slices.zipWithIndex.map { case (sl, i) =>
-          () => sl.write.mode("overwrite").parquet(s"$spool/batch_$i")
-        }
-        withStatePartitions(s, 8) {
-          // last slice is the watermark-flush sentinel — its own lifetime
-          lifetimeGroups(writers.init, Seq(writers.last))
-            .foreach { g => g.foreach(_.apply()); runOnce() }
+              col("user_id"), col("n_events"), col("micro_sum")), root)
         }
 
-        s.read.parquet(out)
+        s.read.parquet(s"$root/out")
           .where(col("user_id") >= 0)
           .select(col("session_start"), col("user_id"), col("n_events"),
             col("micro_sum"))
@@ -385,53 +393,21 @@ object StreamQueries {
     QueryDef(
       "q134_stream_sessions_parity",
       (s, dir) => {
-        import graft.streaming.Streams
-        val root = scratchDir("graft_stream_sess")
-        val rp = new org.apache.hadoop.fs.Path(root)
-        val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(rp, true)
-        val spool = s"$root/spool"
-        val out   = s"$root/out"
-        val ckpt  = s"$root/ckpt"
-
         val ev = Tables.events(s, dir).selectExpr("user_id", "ts", "event_id",
           "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS value_u")
-        val cut = lit("2024-01-10 00:00:00").cast("timestamp")
-        val sentinel = ev.limit(1).select(
-          lit(-1L).as("user_id"), lit("2024-02-02 00:00:00").cast("timestamp").as("ts"),
+        val (data, flush) = halvesAndFlush(ev, lit(-1L).as("user_id"), flushTs,
           lit(-1L).as("event_id"), lit(0L).as("value_u"))
-        val slices = Seq(
-          ev.where(col("ts") < cut),
-          ev.where(col("ts") >= cut),
-          sentinel)
 
-        def runOnce(): Unit = {
-          implicit val sp: org.apache.spark.sql.SparkSession = s
+        val (root, _) = runGate(s, "graft_stream_sess", data, flush) { (root, _) =>
+          implicit val sp: SparkSession = s
           import sp.implicits._
-          val src = s.readStream.schema(ev.schema).parquet(s"$spool/*")
+          val src = s.readStream.schema(ev.schema).parquet(s"$root/spool/*")
             .withWatermark("ts", "1 minute")
             .as[Streams.EvtU]
-          val q = Streams.eventTimeSessions(src, 30L * 60L * 1000L)
-            .toDF()
-            .writeStream
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        val writers: Seq[() => Unit] = slices.zipWithIndex.map { case (sl, i) =>
-          () => sl.write.mode("overwrite").parquet(s"$spool/batch_$i")
-        }
-        withStatePartitions(s, 8) {
-          // last slice is the watermark-flush sentinel — its own lifetime
-          lifetimeGroups(writers.init, Seq(writers.last))
-            .foreach { g => g.foreach(_.apply()); runOnce() }
+          toOut(Streams.eventTimeSessions(src, 30L * 60L * 1000L).toDF(), root)
         }
 
-        s.read.parquet(out)
+        s.read.parquet(s"$root/out")
           .where(col("user_id") >= 0)
           .select(col("user_id"), col("session_start"), col("n_events"),
             col("value_u"))
@@ -471,49 +447,23 @@ object StreamQueries {
     // is fingerprint-level: kept count must equal the corpus's distinct
     // fingerprint count and the fingerprint SET must match exactly (sum
     // of u64 fps as decimal) — survivor-agnostic, run-deterministic.
+    // Append emits immediately here (no watermark hold), so the
+    // collapsed form is ONE lifetime.
     QueryDef(
       "q151_stream_dedup_parity",
       (s, dir) => {
-        val root = scratchDir("graft_stream_dedup")
-        val rp = new org.apache.hadoop.fs.Path(root)
-        val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(rp, true)
-        val spool = s"$root/spool"
-        val out   = s"$root/out"
-        val ckpt  = s"$root/ckpt"
-
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"),
           timestamp_seconds(lit(1704067200L) + col("doc_id")).as("ts"))
-        val slices = Seq(
-          docs.where(col("doc_id") % 3 === 0),
-          docs.where(col("doc_id") % 3 === 1),
-          docs.where(col("doc_id") % 3 === 2))
+        val slices = (0 until 3).map(i => docs.where(col("doc_id") % 3 === i))
 
-        def runOnce(): Unit = {
-          val q = graft.streaming.Streams.dedupDocumentsStream(
-              s.readStream.schema(docs.schema).parquet(s"$spool/*"),
+        val (root, _) = runGate(s, "graft_stream_dedup", spooled(slices)) { (root, _) =>
+          toOut(Streams.dedupDocumentsStream(
+              s.readStream.schema(docs.schema).parquet(s"$root/spool/*"),
               "ts", "text", "365 days")
-            .select(col("doc_id"), col("content_fp"))
-            .writeStream
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        val writers: Seq[() => Unit] = slices.zipWithIndex.map { case (sl, i) =>
-          () => sl.write.mode("overwrite").parquet(s"$spool/batch_$i")
-        }
-        withStatePartitions(s, 8) {
-          // append emits immediately here (no watermark hold), so the
-          // collapsed form is ONE lifetime
-          lifetimeGroups(writers, Seq.empty)
-            .foreach { g => g.foreach(_.apply()); runOnce() }
+            .select(col("doc_id"), col("content_fp")), root)
         }
 
-        s.read.parquet(out)
+        s.read.parquet(s"$root/out")
           .agg(count(lit(1)).as("n_kept"),
             countDistinct(col("content_fp")).as("n_distinct_fp"),
             sum(col("content_fp").cast(org.apache.spark.sql.types.DecimalType(38, 0)))
@@ -542,56 +492,20 @@ object StreamQueries {
     // here it would make results slice-order-dependent. Inner interval
     // joins emit each match exactly once regardless of arrival order,
     // so stream == batch exactly; the gate is an aggregate checksum
-    // over all matched pairs.
+    // over all matched pairs. Matches emit immediately, so the collapsed
+    // form is ONE lifetime.
     QueryDef(
       "q153_stream_interval_join",
       (s, dir) => {
-        val root = scratchDir("graft_stream_ij")
-        val rp = new org.apache.hadoop.fs.Path(root)
-        val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(rp, true)
-        val out  = s"$root/out"
-        val ckpt = s"$root/ckpt"
+        val (left, right) = joinSides(s, dir)
+        val slices = joinSlices(left, right)((p, i) => col(s"${p}_id") % 3 === i)
 
-        val ev = Tables.events(s, dir)
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val left = ev.where(col("event_id") % 2 === 0)
-          .select(col("event_id").as("l_id"), col("user_id").as("l_user"),
-            col("ts").as("l_ts"))
-        val right = ev.where(col("event_id") % 2 === 1)
-          .select(col("event_id").as("r_id"), col("user_id").as("r_user"),
-            col("ts").as("r_ts"))
-
-        def runOnce(): Unit = {
-          val joined = graft.streaming.Streams.intervalJoinStream(
-            s.readStream.schema(left.schema).parquet(s"$root/l/*"),
-            s.readStream.schema(right.schema).parquet(s"$root/r/*"),
-            "l_user", "r_user", "l_ts", "r_ts",
-            watermark = "365 days", maxDelay = "10 MINUTES")
-          val q = joined.select(col("l_id"), col("r_id"), col("l_user"))
-            .writeStream
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        val writers: Seq[() => Unit] = (0 until 3).map(i => () => {
-          left.where(col("l_id") % 3 === i)
-            .write.mode("overwrite").parquet(s"$root/l/batch_$i")
-          right.where(col("r_id") % 3 === i)
-            .write.mode("overwrite").parquet(s"$root/r/batch_$i")
-        })
-        withStatePartitions(s, 8) {
-          // inner joins emit matches immediately (year watermark, no
-          // eviction in-run) — collapsed form is ONE lifetime
-          lifetimeGroups(writers, Seq.empty)
-            .foreach { g => g.foreach(_.apply()); runOnce() }
+        val (root, _) = runGate(s, "graft_stream_ij", slices) { (root, _) =>
+          toOut(joinStream(s, root, left, right, "365 days")
+            .select(col("l_id"), col("r_id"), col("l_user")), root)
         }
 
-        s.read.parquet(out)
+        s.read.parquet(s"$root/out")
           .agg(count(lit(1)).as("n_pairs"),
             sum(col("l_id")).as("l_id_sum"),
             sum(col("r_id")).as("r_id_sum"),
@@ -620,51 +534,27 @@ object StreamQueries {
     // watermark — only the stream side is unbounded). Three checkpointed
     // slices prove offsets resume; unmatched users keep their rows
     // (LEFT) and land in the UNKNOWN segment, so silently dropped
-    // non-matches can't hide. Value stays in exact micro-units.
+    // non-matches can't hide. Value stays in exact micro-units. Rows
+    // emit per micro-batch, so the collapsed form is ONE lifetime.
     QueryDef(
       "q154_stream_static_join",
       (s, dir) => {
-        val root = scratchDir("graft_stream_enrich")
-        val rp = new org.apache.hadoop.fs.Path(root)
-        val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(rp, true)
-        val spool = s"$root/spool"
-        val out   = s"$root/out"
-        val ckpt  = s"$root/ckpt"
-
         val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
           (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)) * 1000000)
             .cast("long").as("value_u"))
         val dim = Tables.customer(s, dir)
           .select(col("c_custkey"), col("c_mktsegment"))
+        val slices = (0 until 3).map(i => ev.where(col("event_id") % 3 === i))
 
-        def runOnce(): Unit = {
-          val q = s.readStream.schema(ev.schema).parquet(s"$spool/*")
+        val (root, _) = runGate(s, "graft_stream_enrich", spooled(slices)) { (root, _) =>
+          toOut(s.readStream.schema(ev.schema).parquet(s"$root/spool/*")
             .join(dim, col("user_id") === col("c_custkey"), "left_outer")
             .select(col("event_id"), col("user_id"),
               coalesce(col("c_mktsegment"), lit("UNKNOWN")).as("segment"),
-              col("value_u"))
-            .writeStream
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        val writers: Seq[() => Unit] = (0 until 3).map(i => () => {
-          ev.where(col("event_id") % 3 === i)
-            .write.mode("overwrite").parquet(s"$spool/batch_$i")
-        })
-        withStatePartitions(s, 8) {
-          // stateless stream-static join: rows emit per micro-batch —
-          // collapsed form is ONE lifetime
-          lifetimeGroups(writers, Seq.empty)
-            .foreach { g => g.foreach(_.apply()); runOnce() }
+              col("value_u")), root)
         }
 
-        s.read.parquet(out)
+        s.read.parquet(s"$root/out")
           .groupBy(col("segment"))
           .agg(count(lit(1)).as("n_events"),
             sum(col("value_u")).as("value_u_sum"),
@@ -692,76 +582,15 @@ object StreamQueries {
     // id-mod slices) so no row is ever late: the 1-hour watermark delay
     // exceeds the 10-minute match window, which provably prevents both
     // missed matches and premature eviction across slice boundaries.
-    // Two post-data FLUSH lifetimes append far-future sentinel rows on
-    // BOTH sides (the global watermark is the min): the first pushes the
-    // watermark past every real l_ts + maxDelay, the second forces the
-    // extra micro-batch in which the engine emits the last expired
-    // outer rows. Sentinels (user -999, a day apart so they can't match
-    // each other) are filtered before the gate. Stream == batch LEFT
-    // JOIN exactly; the oracle is that batch join.
+    // Two post-data flush lifetimes drain the held rows (outerJoinGate).
+    // Stream == batch LEFT JOIN exactly; the oracle is that batch join.
     QueryDef(
       "q228_stream_outer_join",
       (s, dir) => {
-        val root = scratchDir("graft_stream_oj")
-        val rp = new org.apache.hadoop.fs.Path(root)
-        val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(rp, true)
-        val out  = s"$root/out"
-        val ckpt = s"$root/ckpt"
+        val root = outerJoinGate(s, dir, "graft_stream_oj", "left_outer",
+          Seq("l_id", "r_id", "l_user"))
 
-        val ev = Tables.events(s, dir)
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val left = ev.where(col("event_id") % 2 === 0)
-          .select(col("event_id").as("l_id"), col("user_id").as("l_user"),
-            col("ts").as("l_ts"))
-        val right = ev.where(col("event_id") % 2 === 1)
-          .select(col("event_id").as("r_id"), col("user_id").as("r_user"),
-            col("ts").as("r_ts"))
-        def tercile(c: org.apache.spark.sql.Column, i: Int) =
-          if (i == 0) dayofmonth(c) <= 10
-          else if (i == 1) dayofmonth(c) > 10 && dayofmonth(c) <= 20
-          else dayofmonth(c) > 20
-
-        def runOnce(): Unit = {
-          val joined = graft.streaming.Streams.intervalJoinStream(
-            s.readStream.schema(left.schema).parquet(s"$root/l/*"),
-            s.readStream.schema(right.schema).parquet(s"$root/r/*"),
-            "l_user", "r_user", "l_ts", "r_ts",
-            watermark = "1 hour", maxDelay = "10 MINUTES",
-            joinType = "left_outer")
-          val q = joined.select(col("l_id"), col("r_id"), col("l_user"))
-            .writeStream.format("parquet")
-            .option("path", out).option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-
-        val dataWrites: Seq[() => Unit] = (0 until 3).map(i => () => {
-          left.where(tercile(col("l_ts"), i))
-            .write.mode("overwrite").parquet(s"$root/l/batch_$i")
-          right.where(tercile(col("r_ts"), i))
-            .write.mode("overwrite").parquet(s"$root/r/batch_$i")
-        })
-        val flushWrites: Seq[() => Unit] = (0 until 2).map(f => () => {
-          import s.implicits._
-          val day = 5 + 5 * f
-          Seq((-1000000L - f, -999L,
-              java.sql.Timestamp.valueOf(f"2024-02-$day%02d 00:00:00")))
-            .toDF("l_id", "l_user", "l_ts")
-            .write.mode("overwrite").parquet(s"$root/l/flush_$f")
-          Seq((-2000000L - f, -999L,
-              java.sql.Timestamp.valueOf(f"2024-02-${day + 1}%02d 00:00:00")))
-            .toDF("r_id", "r_user", "r_ts")
-            .write.mode("overwrite").parquet(s"$root/r/flush_$f")
-        })
-        withStatePartitions(s, 8) {
-          lifetimeGroups(dataWrites, flushWrites)
-            .foreach { g => g.foreach(_.apply()); runOnce() }
-        }
-
-        s.read.parquet(out).where(col("l_user") >= 0)
+        s.read.parquet(s"$root/out").where(col("l_user") >= 0)
           .agg(
             sum(when(col("r_id").isNotNull, 1L).otherwise(0L)).as("n_matched"),
             sum(when(col("r_id").isNull, 1L).otherwise(0L))
@@ -807,67 +636,10 @@ object StreamQueries {
     QueryDef(
       "q278_stream_full_outer",
       (s, dir) => {
-        val root = scratchDir("graft_stream_foj")
-        val rp = new org.apache.hadoop.fs.Path(root)
-        val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(rp, true)
-        val out  = s"$root/out"
-        val ckpt = s"$root/ckpt"
+        val root = outerJoinGate(s, dir, "graft_stream_foj", "full_outer",
+          Seq("l_id", "r_id", "l_user", "r_user"))
 
-        val ev = Tables.events(s, dir)
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val left = ev.where(col("event_id") % 2 === 0)
-          .select(col("event_id").as("l_id"), col("user_id").as("l_user"),
-            col("ts").as("l_ts"))
-        val right = ev.where(col("event_id") % 2 === 1)
-          .select(col("event_id").as("r_id"), col("user_id").as("r_user"),
-            col("ts").as("r_ts"))
-        def tercile(c: org.apache.spark.sql.Column, i: Int) =
-          if (i == 0) dayofmonth(c) <= 10
-          else if (i == 1) dayofmonth(c) > 10 && dayofmonth(c) <= 20
-          else dayofmonth(c) > 20
-
-        def runOnce(): Unit = {
-          val joined = graft.streaming.Streams.intervalJoinStream(
-            s.readStream.schema(left.schema).parquet(s"$root/l/*"),
-            s.readStream.schema(right.schema).parquet(s"$root/r/*"),
-            "l_user", "r_user", "l_ts", "r_ts",
-            watermark = "1 hour", maxDelay = "10 MINUTES",
-            joinType = "full_outer")
-          val q = joined
-            .select(col("l_id"), col("r_id"), col("l_user"), col("r_user"))
-            .writeStream.format("parquet")
-            .option("path", out).option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-
-        val dataWrites: Seq[() => Unit] = (0 until 3).map(i => () => {
-          left.where(tercile(col("l_ts"), i))
-            .write.mode("overwrite").parquet(s"$root/l/batch_$i")
-          right.where(tercile(col("r_ts"), i))
-            .write.mode("overwrite").parquet(s"$root/r/batch_$i")
-        })
-        val flushWrites: Seq[() => Unit] = (0 until 2).map(f => () => {
-          import s.implicits._
-          val day = 5 + 5 * f
-          Seq((-1000000L - f, -999L,
-              java.sql.Timestamp.valueOf(f"2024-02-$day%02d 00:00:00")))
-            .toDF("l_id", "l_user", "l_ts")
-            .write.mode("overwrite").parquet(s"$root/l/flush_$f")
-          Seq((-2000000L - f, -999L,
-              java.sql.Timestamp.valueOf(f"2024-02-${day + 1}%02d 00:00:00")))
-            .toDF("r_id", "r_user", "r_ts")
-            .write.mode("overwrite").parquet(s"$root/r/flush_$f")
-        })
-        withStatePartitions(s, 8) {
-          lifetimeGroups(dataWrites, flushWrites)
-            .foreach { g => g.foreach(_.apply()); runOnce() }
-        }
-
-        s.read.parquet(out)
+        s.read.parquet(s"$root/out")
           .where(coalesce(col("l_user"), col("r_user")) >= 0)
           .agg(
             sum(when(col("l_id").isNotNull && col("r_id").isNotNull, 1L)
@@ -926,39 +698,20 @@ object StreamQueries {
     QueryDef(
       "q259_stream_update_mode",
       (s, dir) => {
-        val root = scratchDir("graft_stream_upd")
-        val rp = new org.apache.hadoop.fs.Path(root)
-        val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(rp, true)
-        val spool = s"$root/spool"
-        val ckpt = s"$root/ckpt"
-
-        val ev = Tables.events(s, dir)
-          .select(col("event_id"), col("ts"), col("event_type"),
-            (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2))
-              * 100).cast("long").as("cents"))
-        val cut1 = lit("2024-01-08 00:00:00").cast("timestamp")
-        val cut2 = lit("2024-01-20 00:00:00").cast("timestamp")
-        val slices = Seq(
-          ev.where(col("ts") < cut1),
-          ev.where(col("ts") >= cut1 && col("ts") < cut2),
-          ev.where(col("ts") >= cut2))
-
-        def runOnce(i: Int): Unit = {
-            // one micro-batch per lifetime: the upsert below merges against
-            // state_{i-1}, which is only correct if this lifetime's changed
-            // keys arrive in a single foreachBatch call (AvailableNow
-            // otherwise chunks at 1000 files)
-            val q = s.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", "1000000")
-              .parquet(s"$spool/*")
+        val slices = centsTerciles(s, dir)
+        // the upsert contract is PER LIFETIME (state_i merges into
+        // state_{i-1}), not per slice — so grouping slices into one
+        // lifetime under the bench knob preserves it exactly: the grouped
+        // changed-key set still arrives in that lifetime's single
+        // micro-batch, and the final state index is lifetimes - 1
+        val (root, lifetimes) = runGate(s, "graft_stream_upd", spooled(slices)) {
+          (root, i) =>
+            wholeSpool(s, slices.head.schema, root)
               .groupBy(col("event_type"))
               .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("sum_cents"))
               .writeStream
               .outputMode("update")
-              .option("checkpointLocation", ckpt)
-              .trigger(Trigger.AvailableNow())
-              .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+              .foreachBatch { (df: DataFrame, _: Long) =>
                 val changed = df.cutLineage()
                 val prev = s"$root/state_${i - 1}"
                 val merged =
@@ -972,25 +725,9 @@ object StreamQueries {
                 merged.write.mode("overwrite").parquet(s"$root/state_$i")
                 ()
               }
-              .start()
-            q.awaitTermination()
-        }
-        val writers: Seq[() => Unit] = slices.zipWithIndex.map { case (sl, i) =>
-          () => sl.write.mode("overwrite").parquet(s"$spool/batch_$i")
-        }
-        // the upsert contract is PER LIFETIME (state_i merges into
-        // state_{i-1}), not per slice — so grouping slices into one
-        // lifetime under the bench knob preserves it exactly: the grouped
-        // changed-key set still arrives in that lifetime's single
-        // micro-batch, and the final state index is lifetimes - 1
-        val groups = lifetimeGroups(writers, Seq.empty)
-        withStatePartitions(s, 8) {
-          groups.zipWithIndex.foreach { case (g, gi) =>
-            g.foreach(_.apply()); runOnce(gi)
-          }
         }
 
-        s.read.parquet(s"$root/state_${groups.size - 1}")
+        s.read.parquet(s"$root/state_${lifetimes - 1}")
           .select(col("event_type"), col("n_events"), col("sum_cents"))
           .orderBy(col("event_type"))
       },
@@ -1015,59 +752,28 @@ object StreamQueries {
     // checkpointed AvailableNow lifetimes replay nothing. 100 TB:
     // complete mode re-emits |groups| rows per trigger — right only
     // when the result table is aggregate-sized (here: types × weeks),
-    // which is exactly the documented complete-mode fit.
+    // which is exactly the documented complete-mode fit. No watermark,
+    // so no flush lifetime: the collapsed form is ONE lifetime.
     QueryDef(
       "q262_stream_complete_mode",
       (s, dir) => {
-        val root = scratchDir("graft_stream_cpl")
-        val rp = new org.apache.hadoop.fs.Path(root)
-        val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(rp, true)
-        val spool = s"$root/spool"
-        val ckpt = s"$root/ckpt"
+        val slices = centsTerciles(s, dir)
 
-        val ev = Tables.events(s, dir)
-          .select(col("event_id"), col("ts"), col("event_type"),
-            (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2))
-              * 100).cast("long").as("cents"))
-        val cut1 = lit("2024-01-08 00:00:00").cast("timestamp")
-        val cut2 = lit("2024-01-20 00:00:00").cast("timestamp")
-        val slices = Seq(
-          ev.where(col("ts") < cut1),
-          ev.where(col("ts") >= cut1 && col("ts") < cut2),
-          ev.where(col("ts") >= cut2))
-
-        def runOnce(): Unit = {
-            val q = s.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", "1000000")
-              .parquet(s"$spool/*")
-              // date-level week bucket: integer day diff div 7 (epoch()
-              // casts round vs truncate differently across engines)
-              .withColumn("wk",
-                expr("datediff(to_date(ts), DATE'2024-01-01') div 7").cast("long"))
-              .groupBy(col("event_type"), col("wk"))
-              .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("sum_cents"))
-              .writeStream
-              .outputMode("complete")
-              .option("checkpointLocation", ckpt)
-              .trigger(Trigger.AvailableNow())
-              .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-                // complete mode: df IS the whole result — overwrite, never merge
-                df.write.mode("overwrite").parquet(s"$root/state")
-                ()
-              }
-              .start()
-            q.awaitTermination()
-        }
-        val writers: Seq[() => Unit] = slices.zipWithIndex.map { case (sl, i) =>
-          () => sl.write.mode("overwrite").parquet(s"$spool/batch_$i")
-        }
-        withStatePartitions(s, 8) {
-          // no watermark here: complete mode over all data needs no flush
-          // lifetime, so the collapsed form is ONE lifetime (same result —
-          // the whole table re-emits every trigger anyway)
-          lifetimeGroups(writers, Seq.empty)
-            .foreach { g => g.foreach(_.apply()); runOnce() }
+        val (root, _) = runGate(s, "graft_stream_cpl", spooled(slices)) { (root, _) =>
+          wholeSpool(s, slices.head.schema, root)
+            // date-level week bucket: integer day diff div 7 (epoch()
+            // casts round vs truncate differently across engines)
+            .withColumn("wk",
+              expr("datediff(to_date(ts), DATE'2024-01-01') div 7").cast("long"))
+            .groupBy(col("event_type"), col("wk"))
+            .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("sum_cents"))
+            .writeStream
+            .outputMode("complete")
+            .foreachBatch { (df: DataFrame, _: Long) =>
+              // complete mode: df IS the whole result — overwrite, never merge
+              df.write.mode("overwrite").parquet(s"$root/state")
+              ()
+            }
         }
 
         s.read.parquet(s"$root/state")
@@ -1099,61 +805,28 @@ object StreamQueries {
     //
     // Scale: dedup state is watermark-bounded (2 days of event_ids, not
     // the full corpus) — the same eviction argument as q151; the rest is
-    // one append-mode pass.
+    // one append-mode pass. Survivors emit immediately (no watermark
+    // hold), so the collapsed form is ONE lifetime.
     QueryDef(
       "q268_stream_dedup_watermark",
       (s, dir) => {
-        val root = scratchDir("graft_stream_ddw")
-        val rp = new org.apache.hadoop.fs.Path(root)
-        val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(rp, true)
-        val spool = s"$root/spool"
-        val ckpt = s"$root/ckpt"
-        val out = s"$root/out"
-
-        val ev = Tables.events(s, dir)
-          .select(col("event_id"), col("ts"), col("event_type"),
-            (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2))
-              * 100).cast("long").as("cents"))
-        val cut1 = lit("2024-01-08 00:00:00").cast("timestamp")
-        val cut2 = lit("2024-01-20 00:00:00").cast("timestamp")
-        val slices = Seq(
-          ev.where(col("ts") < cut1),
-          ev.where(col("ts") >= cut1 && col("ts") < cut2),
-          ev.where(col("ts") >= cut2))
-
-        def runOnce(): Unit = {
-            val q = s.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", "1000000")
-              .parquet(s"$spool/*")
-              .withWatermark("ts", "2 days")
-              .dropDuplicatesWithinWatermark("event_id")
-              .writeStream
-              .outputMode("append")
-              .option("checkpointLocation", ckpt)
-              .trigger(Trigger.AvailableNow())
-              .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-                df.write.mode("append").parquet(out)
-                ()
-              }
-              .start()
-            q.awaitTermination()
-        }
-        val writers: Seq[() => Unit] = slices.zipWithIndex.map { case (sl, i) =>
-          () => {
-            val redelivered = sl.where(pmod(col("event_id"), lit(7L)) === 0)
-            sl.unionByName(redelivered)
-              .write.mode("overwrite").parquet(s"$spool/batch_$i")
-          }
-        }
-        withStatePartitions(s, 8) {
-          // dedup emits survivors immediately (no watermark hold) —
-          // collapsed form is ONE lifetime
-          lifetimeGroups(writers, Seq.empty)
-            .foreach { g => g.foreach(_.apply()); runOnce() }
+        val slices = centsTerciles(s, dir).map { sl =>
+          sl.unionByName(sl.where(pmod(col("event_id"), lit(7L)) === 0))
         }
 
-        s.read.parquet(out)
+        val (root, _) = runGate(s, "graft_stream_ddw", spooled(slices)) { (root, _) =>
+          wholeSpool(s, slices.head.schema, root)
+            .withWatermark("ts", "2 days")
+            .dropDuplicatesWithinWatermark("event_id")
+            .writeStream
+            .outputMode("append")
+            .foreachBatch { (df: DataFrame, _: Long) =>
+              df.write.mode("append").parquet(s"$root/out")
+              ()
+            }
+        }
+
+        s.read.parquet(s"$root/out")
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("sum_cents"))
           .orderBy(col("event_type"))
@@ -1180,58 +853,32 @@ object StreamQueries {
     // is the gate. RocksDB provider is set for the run and restored
     // (transformWithState's documented requirement). 100 TB: state is
     // 2 longs per user, hash-partitioned; emission is bounded by touched
-    // keys per batch, never corpus size.
+    // keys per batch, never corpus size. Update-mode emission happens
+    // per batch, so the collapsed form is ONE lifetime.
     QueryDef(
       "q296_stream_transform_with_state",
       (s, dir) => {
-        import graft.streaming.Streams
-        val root = scratchDir("graft_stream_tws")
-        val rp = new org.apache.hadoop.fs.Path(root)
-        val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(rp, true)
-        val spool = s"$root/spool"
-        val out   = s"$root/out"
-        val ckpt  = s"$root/ckpt"
-
         val ev = Tables.events(s, dir).selectExpr("user_id", "ts",
           "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS value_u")
-        val cut = lit("2024-01-10 00:00:00").cast("timestamp")
-        val slices = Seq(
-          ev.where(col("ts") < cut),
-          ev.where(col("ts") >= cut))
 
-        def runOnce(): Unit = {
-          implicit val sp: org.apache.spark.sql.SparkSession = s
-          import sp.implicits._
-          val src = s.readStream.schema(ev.schema).parquet(s"$spool/*")
-            .select(col("user_id"), col("value_u"))
-            .as[Streams.TwsEvent]
-          val q = Streams.runningTotals(src)
-            .toDF()
-            .writeStream
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-              df.write.mode("append").parquet(out)
-              ()
-            }
-            .start()
-          q.awaitTermination()
-        }
-        val writers: Seq[() => Unit] = slices.zipWithIndex.map { case (sl, i) =>
-          () => sl.write.mode("overwrite").parquet(s"$spool/batch_$i")
-        }
         val prevProvider =
           s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          withStatePartitions(s, 8) {
-            // update-mode emission happens per batch — ONE lifetime under
-            // the bench knob, both checkpointed lifetimes under the gate
-            lifetimeGroups(writers, Seq.empty)
-              .foreach { g => g.foreach(_.apply()); runOnce() }
+        val (root, _) = try {
+          runGate(s, "graft_stream_tws", spooled(halves(ev))) { (root, _) =>
+            import s.implicits._
+            val src = s.readStream.schema(ev.schema).parquet(s"$root/spool/*")
+              .select(col("user_id"), col("value_u"))
+              .as[Streams.TwsEvent]
+            Streams.runningTotals(src)
+              .toDF()
+              .writeStream
+              .outputMode("update")
+              .foreachBatch { (df: DataFrame, _: Long) =>
+                df.write.mode("append").parquet(s"$root/out")
+                ()
+              }
           }
         } finally {
           prevProvider.fold(
@@ -1239,7 +886,7 @@ object StreamQueries {
             s.conf.set("spark.sql.streaming.stateStore.providerClass", _))
         }
 
-        s.read.parquet(out)
+        s.read.parquet(s"$root/out")
           .groupBy(col("user_id"))
           .agg(max(struct(col("cum_cnt"), col("cum_sum"))).as("m"))
           .select(col("user_id"), col("m.cum_cnt").as("c"), col("m.cum_sum").as("su"))

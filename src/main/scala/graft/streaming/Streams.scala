@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.IncrementalMerge
 
 /** Structured-Streaming twins of the batch operators: the same semantics
@@ -198,10 +198,11 @@ object Streams {
     * dynamic overwrite commits.
     *
     * `partitionCol` must be non-null on every row (the usual date column
-    * of an incremental model); keys should be unique per batch. */
+    * of an incremental model); keys should be unique per batch. Returns
+    * the unstarted writer, so the caller picks the trigger. */
   def mergeSink(stream: DataFrame, spark: SparkSession, targetPath: String,
       keys: Seq[String], partitionCol: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+      checkpoint: String): DataStreamWriter[Row] =
     stream.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
@@ -209,7 +210,6 @@ object Streams {
         IncrementalMerge.mergeIntoPartitionedTarget(spark, targetPath, batch,
           keys, partitionCol, stagePath = s"${targetPath}__stage_$batchId")
       }
-      .start()
 
   /** transformWithState running totals — the Spark 4 arbitrary-state API
     * (StatefulProcessor + typed ValueState, RocksDB-backed), the modern

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Graphs, TextDedup}
 import graft.plans.CheckpointPolicy
 
-/** The checkpoint-policy seam: identical results under all three policies,
-  * actual durable artifacts under reliable/parquet (the executor-loss
+/** The checkpoint-policy seam: identical results under both policies,
+  * actual durable artifacts under reliable (the executor-loss
   * story: local checkpoint blocks are executor-resident and non-replicated,
   * so a cluster run flips `graft.checkpoint.policy` and iterative loops
   * become recoverable), and pin-neutrality preserved in every mode.
@@ -39,17 +39,13 @@ class CheckpointPolicySpec extends SparkSpec {
   private val expected = Seq(
     (1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L), (10L, 10L), (11L, 10L))
 
-  test("connected components identical under local, reliable, parquet policies") {
+  test("connected components identical under local and reliable policies") {
     val local = withPolicy("local")(ccLabels())
     assert(local == expected)
 
     val relDir = Files.createTempDirectory("graft_ckpt_rel").toString
     val rel = withPolicy("reliable", relDir)(ccLabels())
     assert(rel == expected)
-
-    val pqDir = Files.createTempDirectory("graft_ckpt_pq").toString
-    val pq = withPolicy("parquet", pqDir)(ccLabels())
-    assert(pq == expected)
   }
 
   test("reliable policy writes replicated checkpoint files to the configured dir") {
@@ -64,23 +60,6 @@ class CheckpointPolicySpec extends SparkSpec {
         if (f.isDirectory) f.listFiles.map(partFiles).sum
         else if (f.getName.startsWith("part-")) 1 else 0
       assert(partFiles(root) > 0, s"no checkpoint part files under $root")
-    }
-  }
-
-  test("parquet policy spills self-contained parquet dirs under graft.checkpoint.dir") {
-    val dir = Files.createTempDirectory("graft_ckpt_pq2").toString
-    withPolicy("parquet", dir) {
-      assert(ccLabels() == expected)
-      // Spills nest under a per-application subdir so a janitor can reap
-      // by dead appId (and the shutdown reaper can delete one subtree).
-      val appRoot =
-        new java.io.File(dir, spark.sparkContext.applicationId)
-      assert(appRoot.isDirectory, s"no per-app spill subdir under $dir")
-      val spills = appRoot.listFiles
-        .filter(f => f.isDirectory && f.getName.startsWith("spill_"))
-      assert(spills.nonEmpty, s"no parquet spills under $appRoot")
-      // Each spill is a readable, self-contained parquet dataset.
-      assert(spark.read.parquet(spills.head.getPath).count() >= 0L)
     }
   }
 
@@ -103,15 +82,15 @@ class CheckpointPolicySpec extends SparkSpec {
   test("all policies stay pin-neutral (no cacheManager entries)") {
     for ((p, d) <- Seq(
         ("local", null),
-        ("reliable", Files.createTempDirectory("graft_ckpt_pin_r").toString),
-        ("parquet", Files.createTempDirectory("graft_ckpt_pin_p").toString))) {
+        ("reliable", Files.createTempDirectory("graft_ckpt_pin_r").toString))) {
       withPolicy(p, d)(ccLabels())
       assert(spark.sharedState.cacheManager.isEmpty, s"policy $p left pins")
     }
   }
 
   test("unknown policy fails loudly") {
-    withPolicy("ramdisk") {
+    // parquet was a policy once; it is gone and must not fall back silently
+    for (p <- Seq("ramdisk", "parquet")) withPolicy(p) {
       intercept[IllegalArgumentException] {
         CheckpointPolicy.materialize(pairs)
       }

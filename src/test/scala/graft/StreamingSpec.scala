@@ -120,7 +120,7 @@ class StreamingSpec extends SparkSpec {
     val target = s"$dir/target"; val ckpt = s"$dir/ckpt"
     val in = MemoryStream[(Long, String, String)]
     val q = Streams.mergeSink(
-      in.toDF.toDF("k", "v", "dt"), spark, target, Seq("k"), "dt", ckpt)
+      in.toDF.toDF("k", "v", "dt"), spark, target, Seq("k"), "dt", ckpt).start()
     in.addData((1L, "a1", "2024-01-01"), (2L, "b1", "2024-01-02"))
     q.processAllAvailable()
     def partFiles(part: String): Map[String, Long] = {

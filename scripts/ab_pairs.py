@@ -17,8 +17,12 @@ interquartile range, and two verdicts:
   worse  the change's median is worse than the parent's by more than the
          metric's bound (relative)
 
-It also prints each side's failed and attempted query counts. --out keeps
-every run's metrics as JSON.
+It also prints each query's window per side (median and quartiles, and
+the change's pair wins), read from the run's
+`<build dir>/results/<workload>-seed<S>-trace0/result.json` in each
+checkout, so a claim can name the query that moved, and each side's failed
+and attempted query counts. --out keeps every run's metrics and windows as
+JSON.
 """
 import argparse
 import json
@@ -38,8 +42,13 @@ def run_once(checkout, workload, seed):
         sys.exit(f"ab_pairs: run failed in {checkout} (exit {p.returncode}):\n"
                  + p.stderr[-2000:])
     res = json.loads(lines[-1])
+    # perfbench's raw per-query rows; the build dir is resolved as run.py does
+    build = os.path.join(checkout, os.environ.get("CARGO_TARGET_DIR", ".bench_build"))
+    raw = json.load(open(os.path.join(build, "results", f"{workload}-seed{seed}-trace0",
+                                      "result.json")))
     return {"failed": res["failed"], "attempted": res["attempted"],
-            "metrics": {k: v["value"] for k, v in res["metrics"].items()}}
+            "metrics": {k: v["value"] for k, v in res["metrics"].items()},
+            "windows": {q["name"]: q["window_s"] for q in raw["queries"]}}
 
 
 def quartiles(xs):
@@ -67,6 +76,15 @@ def report(workload, runs, spec):
         print(f"{name:<14} {am:>10.3f} [{a1:.3f}, {a3:.3f}] {bm:>10.3f} [{b1:.3f}, {b3:.3f}]"
               f" {(bm / am - 1) * 100 if am else 0:>+6.1f}% {wins:>3}/{len(runs):<2}"
               f" {a3 - a1:>8.3f}  {' '.join(verdict) or '-'}")
+    print(f"\n{'query window s':<28} {'parent med [q1, q3]':>26} {'change med [q1, q3]':>26}"
+          f" {'delta':>7} {'wins':>6}")
+    for q in runs[0]["parent"]["windows"]:
+        a = [r["parent"]["windows"][q] for r in runs]
+        b = [r["change"]["windows"][q] for r in runs]
+        (a1, am, a3), (b1, bm, b3) = quartiles(a), quartiles(b)
+        wins = sum(y < x for x, y in zip(a, b))
+        print(f"{q:<28} {am:>8.3f} [{a1:.3f}, {a3:.3f}] {bm:>8.3f} [{b1:.3f}, {b3:.3f}]"
+              f" {(bm / am - 1) * 100 if am else 0:>+6.1f}% {wins:>3}/{len(runs):<2}")
     for side in ("parent", "change"):
         f = sum(r[side]["failed"] for r in runs)
         n = sum(r[side]["attempted"] for r in runs)

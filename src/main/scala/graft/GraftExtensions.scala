@@ -17,6 +17,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // dedup expensive subexpressions inside Filter predicates. PreCBO =
     // after the pushdown fixed point, so the rewrite cannot be re-inlined
     ext.injectPreCBORule(_ => graft.plans.DedupExpensiveFilter)
+    // money decimals on longs: DOUBLE→DECIMAL(≤18) casts and
+    // DECIMAL(≤18) sums without BigDecimal (see LongDecimalRewrite)
+    ext.injectPreCBORule(_ => graft.plans.LongDecimalRewrite)
     // a global sort over at most one partition's worth of data sorts in
     // one partition: no range-sampling job (see SmallSortSinglePartition)
     ext.injectQueryStagePrepRule(_ => graft.plans.SmallSortSinglePartition)

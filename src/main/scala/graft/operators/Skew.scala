@@ -76,24 +76,35 @@ object Skew {
   }
 
   /** Input-parallelism skew fix (spark_optimization_guide §2.5 "input
-    * skew": a source whose split count is far below the cluster's core
-    * count serializes every downstream per-row computation — here a
-    * single smallish parquet file splits into ~3 tasks under the
-    * open-cost packing rule, so a CPU-heavy projection (decimal money
-    * chains, JSON parsing, regex normalization) runs on 3 of 32 cores,
-    * twice when a global sort's range-sampling pass re-executes the
-    * child).
+    * skew": a source whose row-carrying split count is far below the
+    * cluster's core count serializes every downstream per-row computation,
+    * e.g. a CPU-heavy projection (decimal money chains, JSON parsing,
+    * regex normalization), twice when a global sort's range-sampling pass
+    * re-executes the child).
+    *
+    * A small parquet file is cut into a few byte-range splits under the
+    * open-cost packing rule, but a row group is read only by the split
+    * that holds its midpoint. Every input under the test data and the
+    * benchmark's generated inputs is one row group, so exactly ONE split
+    * carries rows and the scan runs single-task whatever
+    * `getNumPartitions` reports.
     *
     * Round-robin repartition to the session's default parallelism, but
-    * ONLY when the scan actually under-splits: on a real deployment the
-    * same table arrives in hundreds of >=128 MB splits and this is a
-    * no-op — the shuffle is never paid where the scan already feeds
-    * every core. Deterministic under retry: round-robin repartition
+    * ONLY when the scan reports fewer splits than that: on a real
+    * deployment the same table arrives in hundreds of >=128 MB splits and
+    * this is a no-op. Deterministic under retry: round-robin repartition
     * sorts its input first (spark.sql.execution.sortBeforeRepartition,
     * on by default — SPARK-23207), so task retries reproduce the same
     * row placement. Results are row-set-identical; every consumer in
     * this repo either aggregates or ends in a total ORDER BY, so
-    * partitioning is invisible to the oracle. */
+    * partitioning is invisible to the oracle.
+    *
+    * Call sites opt in per query. A blanket fan-out of every load in
+    * `Tables.load` was measured and rejected (perfbench, 3 alternating
+    * pairs, seed 1, 4-core VM): q01's window went from 2.11-2.70 s to
+    * 2.72-2.95 s, marts makespan from 9.7-11.7 s to 12.5-13.3 s and
+    * stateful makespan from 14.3-14.8 s to 15.6-20.8 s — the extra
+    * shuffle costs more than the parallel projection wins at sf0.1. */
   def fanOutRead(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df

@@ -164,6 +164,10 @@ class StreamingSpec extends SparkSpec {
       Thread.sleep(200)
       rows = spark.table("closed_out").as[Streams.SessionOut].collect()
     }
+    // the timeout keeps no-data batches (each a job) firing every 100 ms;
+    // stopping inside one interrupts it mid-broadcast, so stop between them
+    val idle = System.nanoTime + 10L * 1000 * 1000 * 1000
+    while (q.status.isTriggerActive && System.nanoTime < idle) Thread.sleep(2)
     q.stop()
     assert(rows.exists(r => r.user_id == 1L && r.n_events == 2 && r.total_value == 5.0))
   }

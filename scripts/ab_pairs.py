@@ -2,7 +2,7 @@
 """Alternating A/B pairs of two checkouts through perfbench/run.py.
 
     python3 scripts/ab_pairs.py --parent ../parent --change . \\
-        --workload marts --seed 1 --pairs 10 [--out pairs.json]
+        --workload marts --seed 1 --pairs 10 [--traced] [--out pairs.json]
 
 Each pair runs `python3 perfbench/run.py --workload W --seed S --trace 0`
 once in each checkout, the parent first in even pairs and the change
@@ -23,6 +23,11 @@ the change's pair wins), read from the run's
 checkout, so a claim can name the query that moved, and each side's failed
 and attempted query counts. --out keeps every run's metrics and windows as
 JSON.
+
+--traced adds, after the pairs, one `--trace 1` run per side and prints
+each query's codegen classes and compile ms, JIT ms, executor CPU and
+driver gap from each side's ledger.jsonl, so a claim can name the layer
+that moved.
 """
 import argparse
 import json
@@ -32,20 +37,31 @@ import subprocess
 import sys
 
 
-def run_once(checkout, workload, seed):
+LAYERS = ("codegen_classes", "codegen_ms", "jit_ms", "exec_cpu_s", "gap_s")
+
+
+def results_dir(checkout, workload, seed, trace):
+    # the build dir is resolved as run.py does
+    build = os.path.join(checkout, os.environ.get("CARGO_TARGET_DIR", ".bench_build"))
+    return os.path.join(build, "results", f"{workload}-seed{seed}-trace{trace}")
+
+
+def run_perfbench(checkout, workload, seed, trace):
     p = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--trace", "0"],
+         "--seed", str(seed), "--trace", str(trace)],
         cwd=checkout, capture_output=True, text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
     if p.returncode != 0 or not lines:
         sys.exit(f"ab_pairs: run failed in {checkout} (exit {p.returncode}):\n"
                  + p.stderr[-2000:])
-    res = json.loads(lines[-1])
-    # perfbench's raw per-query rows; the build dir is resolved as run.py does
-    build = os.path.join(checkout, os.environ.get("CARGO_TARGET_DIR", ".bench_build"))
-    raw = json.load(open(os.path.join(build, "results", f"{workload}-seed{seed}-trace0",
-                                      "result.json")))
+    return json.loads(lines[-1])
+
+
+def run_once(checkout, workload, seed):
+    res = run_perfbench(checkout, workload, seed, 0)
+    # perfbench's raw per-query rows
+    raw = json.load(open(os.path.join(results_dir(checkout, workload, seed, 0), "result.json")))
     return {"failed": res["failed"], "attempted": res["attempted"],
             "metrics": {k: v["value"] for k, v in res["metrics"].items()},
             "windows": {q["name"]: q["window_s"] for q in raw["queries"]}}
@@ -91,6 +107,22 @@ def report(workload, runs, spec):
         print(f"{side} failed {f}/{n}")
 
 
+def traced(sides, workload, seed):
+    """One traced run per side; each query's layer fields from its ledger."""
+    out = {}
+    for side, checkout in sides.items():
+        run_perfbench(checkout, workload, seed, 1)
+        with open(os.path.join(results_dir(checkout, workload, seed, 1), "ledger.jsonl")) as f:
+            out[side] = {r["name"]: {k: r[k] for k in LAYERS} for r in map(json.loads, f)}
+    total = {s: {k: sum(r[k] for r in rows.values()) for k in LAYERS} for s, rows in out.items()}
+    print(f"\n{'traced, parent -> change':<28}" + "".join(f" {k:>20}" for k in LAYERS))
+    for q, a, b in [(q, out["parent"][q], out["change"].get(q, {})) for q in out["parent"]] + [
+            ("total", total["parent"], total["change"])]:
+        cells = (f"{a[k]:.4g} -> {b.get(k, float('nan')):.4g}" for k in LAYERS)
+        print(f"{q:<28}" + "".join(f" {c:>20}" for c in cells))
+    return out
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--parent", required=True, help="parent checkout")
@@ -98,12 +130,14 @@ def main():
     ap.add_argument("--workload", required=True, help="comma-separated workloads")
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--traced", action="store_true",
+                    help="after the pairs, one traced run per side: per-query layers")
     ap.add_argument("--out", default=None, help="write every run's metrics here")
     args = ap.parse_args()
 
     sides = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
     spec = json.load(open(os.path.join(sides["change"], "BENCHMARK.json")))
-    out = {}
+    out, layers = {}, {}
     for w in args.workload.split(","):
         runs = []
         for i in range(args.pairs):
@@ -117,8 +151,10 @@ def main():
                   f"{pair['change']['metrics']['makespan_s']:.2f} s", file=sys.stderr, flush=True)
         out[w] = runs
         report(w, runs, spec)
+        if args.traced:
+            layers[w] = traced(sides, w, args.seed)
     if args.out:
-        json.dump({"seed": args.seed, "runs": out}, open(args.out, "w"), indent=1)
+        json.dump({"seed": args.seed, "runs": out, "traced": layers}, open(args.out, "w"), indent=1)
 
 
 if __name__ == "__main__":

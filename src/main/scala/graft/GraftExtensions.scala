@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import graft.functions.{Md5Lower64Bits, RollingHash64, TextKernels, VectorDot}
 
 /** Session extensions: registers the native graft expressions for SQL
@@ -23,6 +25,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // a global sort over at most one partition's worth of data sorts in
     // one partition: no range-sampling job (see SmallSortSinglePartition)
     ext.injectQueryStagePrepRule(_ => graft.plans.SmallSortSinglePartition)
+    // a query over at most 768 KiB runs interpreted: no Janino, no JIT warm-up
+    // for code it runs once (see SmallQueryInterpreted)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def postColumnarTransitions: Rule[SparkPlan] = graft.plans.SmallQueryInterpreted
+    })
     ext.injectFunction((
       new FunctionIdentifier("md5_lower64_bits"),
       new ExpressionInfo(classOf[Md5Lower64Bits].getName, "md5_lower64_bits"),

@@ -352,8 +352,11 @@ class DecimalKernelsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val sums = exprs.flatMap(_.collect { case s: Sum if s.dataType.isInstanceOf[DecimalType] => s })
     assert(casts.isEmpty && sums.isEmpty, s"left: ${casts ++ sums}")
     assert(exprs.exists(_.exists(_.isInstanceOf[ExactDecimalSum])))
-    df.collect()
-    val plan = df.queryExecution.executedPlan
+    // the physical half at sf0.1: at sf0.001 the query is small enough to
+    // run interpreted (plans.SmallQueryInterpreted), with no codegen stage
+    val big = SparkEntry.queries("q01_pricing_summary")(spark, "/root/testdata/sf0.1")
+    big.collect()
+    val plan = big.queryExecution.executedPlan
     val aggs = collect(plan) { case h: HashAggregateExec => h }
     val stages = collect(plan) { case w: WholeStageCodegenExec => w }
     val staged = stages.flatMap(_.child.collect { case h: HashAggregateExec => h })

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * main (Bench, BenchProfile, Verify, PlanAudit, Quickstart) and the test
   * fixture, so the oracle gate runs the shape that gets timed.
   * RecoveryProof keeps its own builder: it needs a `local-cluster` master
-  * and checkpoint-policy confs that no other caller wants.
+  * and a `spark.checkpoint.dir` that no other caller wants.
   */
 object Harness {
 
@@ -40,7 +40,7 @@ object Harness {
     * (round-9 watch item — the ~20% driver-vs-builder suite drift):
     *   1. cacheManager entries (CC edge frames, catalog nodes) —
     *      catalog.clearCache().
-    *   2. localCheckpoint blocks from cutLineage()'s local policy: these
+    *   2. localCheckpoint blocks from cutLineage()'s local cuts: these
     *      are NOT in the cacheManager; the checkpoint RDD sits in
     *      sc.persistentRdds and only the ASYNC ContextCleaner reaps its
     *      blocks after a driver GC notices the dropped reference. Across

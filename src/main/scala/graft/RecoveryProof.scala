@@ -6,17 +6,18 @@ import org.apache.spark.sql.functions._
 /** Executor-loss recovery proof (round-9 verdict item 2) — script-run,
   * not part of `sbt test` (it forks executor JVMs and kills one).
   *
-  * CheckpointPolicy's scaladoc claims the `reliable` policy survives
-  * losing an executor mid-iteration where `local` (localCheckpoint,
-  * executor-resident non-replicated blocks) cannot. This main PROVES it
-  * instead of claiming it:
+  * CheckpointPolicy's scaladoc claims a reliable cut (taken whenever the
+  * SparkContext has a checkpoint dir) survives losing an executor
+  * mid-iteration where a local one (localCheckpoint, executor-resident
+  * non-replicated blocks) cannot. This main PROVES it instead of
+  * claiming it:
   *
   *   1. runs the iterative operators (connected components on the q48
   *      shape, k-core on the q213 shape) on `local[4]` to fix the
   *      expected answers;
   *   2. re-runs them on `local-cluster[2,2,1024]` — a real standalone
   *      mini-cluster whose executors are SEPARATE JVM PROCESSES — with
-  *      `graft.checkpoint.policy=reliable` and a shared checkpoint dir,
+  *      `spark.checkpoint.dir` set to a shared checkpoint dir,
   *      while a killer thread SIGKILLs one executor process mid-loop
   *      (the standalone worker respawns a replacement; lost tasks
   *      reschedule; checkpointed lineage re-reads the REPLICATED files
@@ -273,17 +274,16 @@ object RecoveryProof {
   }
 
   // Not Harness.session: this proof needs a `local-cluster` master and
-  // the checkpoint-policy confs, and folding them in would make the shared
-  // factory branch on its caller.
-  private def session(master: String, policy: String): SparkSession = {
+  // a checkpoint dir, and folding them in would make the shared factory
+  // branch on its caller. With `checkpointDir` set every cut is reliable.
+  private def session(master: String, checkpointDir: Option[String])
+      : SparkSession = {
     val b = SparkSession.builder()
       .master(master)
-      .appName(s"recovery-$policy")
+      .appName("recovery")
       .config("spark.sql.shuffle.partitions", 8)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("graft.checkpoint.policy", policy)
-      .config("graft.checkpoint.dir", "/tmp/graft_recovery_ckpt")
       // local-cluster executors are fresh JVMs built from SPARK_HOME jars;
       // they also need the repo classes (run with SPARK_SCALA_VERSION=2.13
       // so the worker's command builder resolves a bare distro layout)
@@ -292,6 +292,7 @@ object RecoveryProof {
           "/root/repo/target/scala-2.13/classes"))
       // fail fast if recovery is NOT working (default 4 is fine; be explicit)
       .config("spark.task.maxFailures", "4")
+    checkpointDir.foreach(b.config("spark.checkpoint.dir", _))
     b.getOrCreate()
   }
 
@@ -303,7 +304,7 @@ object RecoveryProof {
 
     // 1. baseline on plain local[4]
     println(s"[recovery] phase 1: baseline local[4], n=$n")
-    val s1 = session("local[4]", "local")
+    val s1 = session("local[4]", None)
     s1.sparkContext.setLogLevel("ERROR")
     val nStream = math.max(n * 12, 1200000L) // several seconds per lifetime
     val ccExp = ccChecksum(edges(s1, n))
@@ -315,14 +316,15 @@ object RecoveryProof {
       s"stream=$stExp sessions=$ssExp")
     s1.stop()
 
-    // 2. local-cluster + reliable policy + mid-loop SIGKILL. The body
+    // 2. local-cluster + reliable cuts + mid-loop SIGKILL. The body
     // receives an `arm` hook that starts the killer 3s later — bodies
     // with setup work (spool writes) arm it right before the loop under
     // test so the kill lands inside it, not in the setup.
     def killedRun(tag: String)(body: (SparkSession, () => Unit) => (Long, Long))
         : (Long, Long) = {
       println(s"[recovery] phase 2($tag): local-cluster, kill=$doKill")
-      val s = session("local-cluster[2,2,1024]", "reliable")
+      val s = session("local-cluster[2,2,1024]",
+        Some("/tmp/graft_recovery_ckpt"))
       s.sparkContext.setLogLevel("WARN")
       try {
         // wait for both executors to register before starting

@@ -25,9 +25,10 @@ import org.apache.spark.sql.functions._
   *   $"o_ts", $"a_ts", orders.columns.map(col), Seq($"a_city"))
   * }}}
   *
-  * Cluster deployments should also set the two engine-wide knobs:
-  *   - `graft.checkpoint.policy` = `reliable` so iterative
-  *     operators survive executor loss — see [[graft.plans.CheckpointPolicy]];
+  * Cluster deployments should also set two engine-wide Spark settings:
+  *   - `spark.checkpoint.dir` (a replicated HDFS/object-store path) so
+  *     iterative operators' lineage cuts become reliable checkpoints
+  *     that survive executor loss — see [[graft.plans.CheckpointPolicy]];
   *   - AQE on (default) — the skew helpers in [[skew]] document when
   *     manual salting still beats AQE's runtime splitting.
   */
@@ -62,7 +63,7 @@ object api {
   /** Skew weapons: salted aggregate, salted broadcast join, bucketed
     * range join. */
   val skew: operators.Skew.type = operators.Skew
-  /** Policy-selected lineage cut for iterative loops:
+  /** Lineage cut for iterative loops (reliable when a checkpoint dir is set):
     * `df.cutLineage()` via `import graft.plans.CheckpointPolicy._`. */
   val checkpointPolicy: plans.CheckpointPolicy.type = plans.CheckpointPolicy
   /** Secondary-sort streaming folds for non-prefix-expressible per-key

@@ -269,7 +269,7 @@ object AnnIndex {
     * "SelectedBucketsCount: k out of numBuckets" on the scan — the
     * bucketed twin of the partitioned layout's DPP. Results are
     * identical to probeSrp/probeSrpMultiProbe over the same corpus
-    * (pinned in Round11AnnSpec). */
+    * (pinned in AnnIndexSpec). */
   def probeSrpBucketed(spark: SparkSession, tableName: String,
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       planes: Int, dim: Int, multiProbe: Boolean = false): DataFrame = {

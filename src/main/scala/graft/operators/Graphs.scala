@@ -7,8 +7,9 @@ import graft.plans.CheckpointPolicy.DataFrameCutOps
 /** Iterative graph operators beyond the connected-components family
   * (TextDedup.connectedComponents): k-core decomposition by parallel
   * peeling. Same loop discipline as CC — an eager `cutLineage()`
-  * ([[graft.plans.CheckpointPolicy]]: `local` = localCheckpoint in one
-  * JVM, `reliable` = reliable checkpoint on clusters) per round keeps the plan
+  * ([[graft.plans.CheckpointPolicy]]: localCheckpoint by default, a
+  * reliable checkpoint when the SparkContext has a checkpoint dir, as on
+  * clusters) per round keeps the plan
   * constant-size and the loop pin-neutral (no cacheManager entries), and
   * the convergence probe reads materialized blocks, not lineage.
   */

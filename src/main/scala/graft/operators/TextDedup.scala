@@ -262,11 +262,11 @@ object TextDedup {
     * (`cutLineage()`) — lineage truncated, NO cacheManager registration —
     * so callers and harnesses need no cache hygiene, and a suite running
     * many queries accumulates zero pins from this loop. Locally that is
-    * `localCheckpoint`; a cluster sets `graft.checkpoint.policy=reliable`
-    * so an executor loss mid-iteration recomputes nothing
-    * and loses nothing — local checkpoint blocks are executor-resident and
-    * non-replicated, which at 1000 executors makes a loss per run a
-    * near-certainty.
+    * `localCheckpoint`; a cluster sets `spark.checkpoint.dir`, which makes
+    * every cut a reliable checkpoint, so an executor loss mid-iteration
+    * recomputes nothing and loses nothing — local checkpoint blocks are
+    * executor-resident and non-replicated, which at 1000 executors makes a
+    * loss per run a near-certainty.
     *
     * Each phase is one hash shuffle (groupBy the star center) + one
     * co-partitioned join; the convergence probe compares two PERSISTED

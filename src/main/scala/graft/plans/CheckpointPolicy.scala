@@ -2,10 +2,10 @@ package graft.plans
 
 import org.apache.spark.sql.DataFrame
 
-/** Policy seam for lineage-cutting materialization inside iterative
-  * operators and multi-consumer pipeline spines.
+/** The lineage cut inside iterative operators and multi-consumer
+  * pipeline spines.
   *
-  * Why a seam: the repo's iterative loops (connected components, k-core,
+  * Why a cut: the repo's iterative loops (connected components, k-core,
   * BFS, SemDeDup) and multiply-consumed frames all need a
   * materialize-and-truncate step — without it the logical plan multiplies
   * per round and multi-consumer subtrees recompute. `localCheckpoint(true)`
@@ -15,44 +15,29 @@ import org.apache.spark.sql.DataFrame
   * kills the job, because the truncated lineage cannot recompute the lost
   * blocks. At 100 TB on ~1000 executors that is a near-certainty per run.
   *
-  * The seam keeps `localCheckpoint` as the single-JVM fast path and lets a
-  * cluster deployment flip ONE config to a fault-tolerant cut:
+  * The cut follows the state Spark already has, with no setting of its own:
   *
-  *   - `graft.checkpoint.policy=local` (default): `localCheckpoint(true)`.
-  *   - `graft.checkpoint.policy=reliable`: `Dataset.checkpoint(true)` to
-  *     the reliable checkpoint dir (HDFS/object store — replicated, so an
-  *     executor loss recomputes nothing and loses nothing). The dir comes
-  *     from `SparkContext.checkpointDir` if already set, else from
-  *     `graft.checkpoint.dir` (set lazily on first use). This is not just
-  *     a claim: `graft.RecoveryProof` (script-run) SIGKILLs an executor
-  *     JVM mid-iteration under `local-cluster[2,2,1024]` with this policy
-  *     and asserts the CC / k-core outputs are byte-identical to an
+  *   - no checkpoint dir on the SparkContext (the default):
+  *     `localCheckpoint(true)`, the single-JVM fast path;
+  *   - a checkpoint dir set (`spark.checkpoint.dir`, read when the
+  *     SparkContext starts, or `SparkContext.setCheckpointDir`):
+  *     `Dataset.checkpoint(true)` to that dir (HDFS/object store —
+  *     replicated, so an executor loss recomputes nothing and loses
+  *     nothing). This is not just a claim: `graft.RecoveryProof`
+  *     (script-run) SIGKILLs an executor JVM mid-iteration under
+  *     `local-cluster[2,2,1024]` with `spark.checkpoint.dir` set and
+  *     asserts the CC / k-core outputs are byte-identical to an
   *     undisturbed run — measured results in SCALE.md §"Executor-loss
   *     recovery".
   *
   * Both are pin-neutral — neither registers anything in the
-  * cacheManager, so PinHygieneSpec's invariant holds under either policy.
+  * cacheManager, so PinHygieneSpec's invariant holds either way.
   *
   * Cleanup: reliable-checkpoint RDD files are removed by the
   * ContextCleaner when `spark.cleaner.referenceTracking.cleanCheckpoints`
   * is set, else at application end.
   */
 object CheckpointPolicy {
-
-  val PolicyKey = "graft.checkpoint.policy"
-  val DirKey = "graft.checkpoint.dir"
-
-  sealed trait Policy
-  case object Local extends Policy
-  case object Reliable extends Policy
-
-  def resolve(df: DataFrame): Policy =
-    df.sparkSession.conf.get(PolicyKey, "local") match {
-      case "local" => Local
-      case "reliable" => Reliable
-      case other => throw new IllegalArgumentException(
-        s"$PolicyKey must be local|reliable, got '$other'")
-    }
 
   // ── Test-visible pre-cut plan registry ────────────────────────────
   // materialize() TRUNCATES lineage, so any plan node upstream of a cut
@@ -83,27 +68,18 @@ object CheckpointPolicy {
   /** Stop recording and drop this thread's buffer. */
   def stopRecordingCutPlans(): Unit = cutPlanRecorder.remove()
 
-  /** Materialize `df` and truncate its lineage under the session's
-    * configured policy. Eager in both modes — iterative callers rely
-    * on the cut frame being computed exactly once. */
+  /** Materialize `df` and truncate its lineage: a reliable checkpoint when
+    * the SparkContext has a checkpoint dir, else a local one. Eager in
+    * both cases — iterative callers rely on the cut frame being computed
+    * exactly once. */
   def materialize(df: DataFrame): DataFrame = {
     val rec = cutPlanRecorder.get
     // optimizedPlan is lazy-cached in QueryExecution and the cut is about
     // to execute the frame anyway — recording adds no extra optimization.
     if (rec != null) rec.add(df.queryExecution.optimizedPlan)
-    materialize0(df)
-  }
-
-  private def materialize0(df: DataFrame): DataFrame = resolve(df) match {
-    case Local => df.localCheckpoint(true)
-    case Reliable =>
-      val sc = df.sparkSession.sparkContext
-      if (sc.getCheckpointDir.isEmpty) {
-        val dir = df.sparkSession.conf.get(DirKey, null)
-        require(dir != null,
-          s"$PolicyKey=reliable needs SparkContext.checkpointDir or $DirKey")
-        sc.setCheckpointDir(dir)
-      }
+    if (df.sparkSession.sparkContext.getCheckpointDir.isEmpty)
+      df.localCheckpoint(true)
+    else {
       // checkpoint(eager=true) on an unpersisted Dataset computes the
       // subtree TWICE (once for the eager action, once for the
       // ReliableCheckpointRDD write job) — Spark's documented caveat.
@@ -113,6 +89,7 @@ object CheckpointPolicy {
       df.persist()
       try df.checkpoint(true)
       finally df.unpersist(blocking = false)
+    }
   }
 
   /** `df.cutLineage()` — the call sites' spelling of [[materialize]]. */

@@ -891,7 +891,7 @@ object AnnIndexQueries {
     // same SRP math, but CLUSTERED BY bucket into 8 files instead of one
     // directory per bucket — the probed bucket values become a literal IN
     // filter that Spark's bucket pruning turns into
-    // SelectedBucketsCount (Round11AnnSpec pins the plan shape). Answers
+    // SelectedBucketsCount (AnnIndexSpec pins the plan shape). Answers
     // must be byte-identical to the partitioned layout's (q381's oracle,
     // reused verbatim).
     QueryDef(

@@ -1,27 +1,21 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
-/** Materialization policies — the reference's sink surface
-  * (reference dbt_project.yml:16-39: view / table / incremental /
-  * ephemeral-like caching) plus the custom schema-name resolution
+/** Materialization sinks — the reference's sink surface
+  * (reference dbt_project.yml:16-39: view / table / incremental)
+  * plus the custom schema-name resolution
   * (reference macros/generate_schema_name.sql:1-10: a declared custom
   * schema is used VERBATIM, not prefixed).
   *
-  * On a cluster the `table` policy writes partitioned parquet (callers
+  * On a cluster the `table` sink writes partitioned parquet (callers
   * pass partition columns for date-partitioned marts); `view` registers
-  * a session view (no data movement); `cache` pins a hot frame
-  * MEMORY_AND_DISK for DAG nodes with multiple consumers (see
-  * graft.plans.Pipeline); incremental-merge lives in
-  * operators.IncrementalMerge.
+  * a session view (no data movement); incremental-merge lives in
+  * operators.IncrementalMerge. DAG nodes with multiple consumers are not
+  * a sink: graft.plans.Pipeline materializes them with `cutLineage()`
+  * (graft.plans.CheckpointPolicy), which pins nothing in the cacheManager.
   */
 object Materialize {
-
-  sealed trait Policy
-  case object AsView extends Policy
-  case object AsTable extends Policy
-  case object AsCache extends Policy
 
   /** (schema, table) → session-catalog view name. Mirrors the reference
     * macro: custom schema verbatim, joined with a double underscore
@@ -61,18 +55,4 @@ object Materialize {
       .sortBy(bucketCol)
       .format("parquet")
       .saveAsTable(name)
-
-  /** Transient/cache sink: pin + register (spill-safe storage level). */
-  def cache(df: DataFrame, schema: String, table: String): DataFrame = {
-    val pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
-    pinned.createOrReplaceTempView(resolveName(schema, table))
-    pinned
-  }
-
-  def apply(policy: Policy, df: DataFrame, spark: SparkSession,
-      outDir: String, schema: String, table: String): Unit = policy match {
-    case AsView  => view(df, schema, table)
-    case AsTable => Materialize.table(df, outDir, schema, table)
-    case AsCache => cache(df, schema, table)
-  }
 }

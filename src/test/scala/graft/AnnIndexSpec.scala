@@ -3,30 +3,35 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.AnnIndex
 
-/** Round-11 ANN-index hardening (round-10 verdict items 3/4/7).
+/** AnnIndex: the SRP (random-hyperplane) and IVF vector indexes, their
+  * manifests and their probes, pinned at the unit level.
   *
-  * 1. The multi-probe bit-flip masks are built as `1L << j`; the
-  *    round-10 nit was an INT literal that wrapped past j=31. The spec
-  *    drives `srpProbeTargets` at planes=40 — unreachable via the gates
-  *    (they use 6) — and asserts every Hamming-1 probe bucket differs
-  *    from the home bucket in exactly one bit, with all 40 bit
-  *    positions covered (a wrapped mask would collide positions ≥ 32
-  *    onto 0..7 and double-flip).
-  * 2. The planes-range guard rejects out-of-range values loudly.
-  * 3. `appendSrp` keeps the merge's upsert contract: a re-appearing id
-  *    with an unchanged vector upserts cleanly (same bucket, no
-  *    duplicate); a CHANGED vector moves buckets and leaves a stale row
-  *    behind — the documented partition-moving exclusion, pinned here
-  *    so the hazard stays visible.
-  * 4. `trainCentroidsKMeans` emits dim-length double centroids and
-  *    drops cells that capture no vectors (classic Lloyd), so layouts
-  *    downstream never see phantom empty cells.
+  *  - Multi-probe bit-flip masks are built as `1L << j`: at planes=40
+  *    (unreachable via the gates, which use 6) every Hamming-1 probe
+  *    bucket differs from the home bucket in exactly one bit, with all 40
+  *    positions covered. The planes-range guard rejects 0 and 63.
+  *  - `appendSrp` keeps the merge's upsert contract: a re-appearing id
+  *    with an unchanged vector upserts cleanly; a CHANGED vector moves
+  *    buckets and leaves a stale row behind — the documented
+  *    partition-moving exclusion, pinned so the hazard stays visible.
+  *  - Manifests: path-based probes take their knobs from the index, a
+  *    malformed manifest line fails naming the path and line, and a
+  *    mismatched append or probe (wrong planes, wrong dim) fails loudly in
+  *    the partitioned, bucketed and IVF layouts alike.
+  *  - The bucketed layout's probe bucket-prunes its scan and matches the
+  *    partitioned probe.
+  *  - `trainCentroidsKMeans` emits dim-length double centroids, drops
+  *    cells that capture no vectors, and seeds by id RANK (k smallest
+  *    ids), so an id space starting at 1000 still trains k centroids.
   */
-class Round11AnnSpec extends SparkSpec {
+class AnnIndexSpec extends SparkSpec {
   import spark.implicits._
 
   private def vec(seed: Int): Array[Float] =
     Array.tabulate(64)(d => (((seed * 31 + d * 17) % 13) - 6) / 6.0f)
+
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
 
   test("multi-probe masks flip exactly one bit each, incl. planes > 32") {
     val q = Seq((0L, vec(1))).toDF("vec_id", "embedding")
@@ -62,8 +67,7 @@ class Round11AnnSpec extends SparkSpec {
   test("appendSrp upserts an unchanged re-appearing id; changed vectors are excluded") {
     val base = Seq((0L, vec(1)), (1L, vec(2)), (2L, vec(3)))
       .toDF("vec_id", "embedding")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_r11_srp").toString + "/idx"
+    val path = tmp("graft_ann_srp") + "/idx"
     AnnIndex.buildSrp(base, "vec_id", "embedding", 6, 64, path)
     // id 1 reappears with its UNCHANGED vector + one genuinely new id:
     // same vector -> same bucket -> clean keep-new upsert
@@ -94,8 +98,7 @@ class Round11AnnSpec extends SparkSpec {
   test("index manifest: path-probe takes knobs from the index; mismatched append fails loudly") {
     val corpus = (0 until 50).map(i => (i.toLong, vec(i)))
       .toDF("vec_id", "embedding")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_r11_manifest").toString + "/idx"
+    val path = tmp("graft_ann_manifest") + "/idx"
     AnnIndex.buildSrp(corpus, "vec_id", "embedding", 6, 64, path)
     assert(AnnIndex.readManifest(spark, path) ==
       Map("kind" -> "srp", "planes" -> "6", "dim" -> "64"))
@@ -126,13 +129,12 @@ class Round11AnnSpec extends SparkSpec {
   test("bucketed ANN layout: probe bucket-prunes the scan and matches the partitioned probe") {
     val corpus = (0 until 200).map(i => (i.toLong, vec(i)))
       .toDF("vec_id", "embedding")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_r11_bucketed").toString
+    val root = tmp("graft_ann_bucketed")
     AnnIndex.buildSrpBucketed(corpus, "vec_id", "embedding",
       planes = 6, dim = 64, path = s"$root/tbl",
-      tableName = "r11_srp_bucketed", numBuckets = 8)
+      tableName = "ann_srp_pruned", numBuckets = 8)
     val q = corpus.where(col("vec_id") < 3)
-    val bucketed = AnnIndex.probeSrpBucketed(spark, "r11_srp_bucketed", q,
+    val bucketed = AnnIndex.probeSrpBucketed(spark, "ann_srp_pruned", q,
       "vec_id", "embedding", k = 3, planes = 6, dim = 64)
 
     AnnIndex.buildSrp(corpus, "vec_id", "embedding", 6, 64, s"$root/part")
@@ -147,7 +149,7 @@ class Round11AnnSpec extends SparkSpec {
     val plan = bucketed.queryExecution.executedPlan.toString
     assert(plan.contains("SelectedBucketsCount"),
       s"expected bucket pruning on the probe scan, plan:\n$plan")
-    spark.sql("DROP TABLE IF EXISTS r11_srp_bucketed")
+    spark.sql("DROP TABLE IF EXISTS ann_srp_pruned")
   }
 
   test("trainCentroidsKMeans: dim-length double centroids, empty cells dropped") {
@@ -165,5 +167,65 @@ class Round11AnnSpec extends SparkSpec {
     rows.values.foreach(v => assert(v.length == 64))
     // the two sign-clusters must land on distinct surviving centroids
     assert(rows.values.exists(_.head > 0) && rows.values.exists(_.head < 0))
+  }
+
+  test("readManifest: malformed line fails with path + line, not MatchError") {
+    val dir = tmp("ann_manifest")
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(dir, "_graft_index_manifest"),
+      "kind=srp\nplanes6\n".getBytes("UTF-8"))
+    val e = intercept[IllegalStateException] {
+      AnnIndex.readManifest(spark, dir)
+    }
+    assert(e.getMessage.contains("planes6"))
+    assert(e.getMessage.contains("_graft_index_manifest"))
+  }
+
+  test("bucketed SRP probe rejects foreign planes via the manifest") {
+    val corpus = (0L until 64L).map(i => (i, vec(i.toInt)))
+      .toDF("vec_id", "embedding")
+    val path = tmp("ann_srpbkt") + "/idx"
+    AnnIndex.buildSrpBucketed(corpus, "vec_id", "embedding",
+      planes = 6, dim = 64, path = path,
+      tableName = "ann_srp_foreign", numBuckets = 4)
+    val q = corpus.where(col("vec_id") < 2)
+    // right knobs probe fine
+    assert(AnnIndex.probeSrpBucketed(spark, "ann_srp_foreign", q,
+      "vec_id", "embedding", k = 3, planes = 6, dim = 64).count() > 0)
+    // wrong planes = a different signature space — rejected loudly
+    val e = intercept[IllegalStateException] {
+      AnnIndex.probeSrpBucketed(spark, "ann_srp_foreign", q,
+        "vec_id", "embedding", k = 3, planes = 8, dim = 64).count()
+    }
+    assert(e.getMessage.contains("planes"))
+  }
+
+  test("appendIvf rejects a wrong-dim batch against the manifest") {
+    val corpus = (0L until 64L).map(i => (i, vec(i.toInt)))
+      .toDF("vec_id", "embedding")
+    val path = tmp("ann_ivfdim") + "/ivf"
+    AnnIndex.buildIvf(corpus, "vec_id", "embedding", numCells = 4, path = path)
+    val batch = Seq((100L, vec(7))).toDF("vec_id", "embedding")
+    val e = intercept[IllegalStateException] {
+      AnnIndex.appendIvf(spark, path, batch, "vec_id", "embedding",
+        dim = 32, stagePath = path + "_stage")
+    }
+    assert(e.getMessage.contains("dim"))
+  }
+
+  test("centroid seeding is a rank: non-0-based id space still seeds k") {
+    // ids start at 1000 — the old `vid < k` predicate would seed ZERO
+    // centroids here and write a degenerate index
+    val corpus = (1000L until 1032L).map(i => (i, vec(i.toInt)))
+      .toDF("vec_id", "embedding")
+    val cent = AnnIndex.trainCentroidsKMeans(corpus, "vec_id", "embedding",
+      k = 4, rounds = 1)
+    assert(cent.count() == 4)
+    val path = tmp("ann_ivfhigh") + "/ivf"
+    AnnIndex.buildIvf(corpus, "vec_id", "embedding", numCells = 4, path = path)
+    val centIds = spark.read.parquet(s"$path/centroids")
+      .select(col("cid")).as[Long].collect().sorted.toVector
+    assert(centIds == Vector(1000L, 1001L, 1002L, 1003L))
+    assert(AnnIndex.readIndex(spark, s"$path/cells").count() == 32)
   }
 }

@@ -1,15 +1,16 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.CheckpointDirAccess
 import org.apache.spark.sql.functions._
 import graft.operators.{Graphs, TextDedup}
-import graft.plans.CheckpointPolicy
 
-/** The checkpoint-policy seam: identical results under both policies,
-  * actual durable artifacts under reliable (the executor-loss
-  * story: local checkpoint blocks are executor-resident and non-replicated,
-  * so a cluster run flips `graft.checkpoint.policy` and iterative loops
-  * become recoverable), and pin-neutrality preserved in every mode.
+/** The lineage cut follows the SparkContext's checkpoint dir: identical
+  * results with and without one, durable artifacts under the dir when it
+  * is set (the executor-loss story: local checkpoint blocks are
+  * executor-resident and non-replicated, so a cluster sets
+  * `spark.checkpoint.dir` and iterative loops become recoverable), local
+  * cuts again once it is cleared, and pin-neutrality either way.
   */
 class CheckpointPolicySpec extends SparkSpec {
   import spark.implicits._
@@ -18,19 +19,20 @@ class CheckpointPolicySpec extends SparkSpec {
   private def pairs = Seq(
     (2L, 1L), (3L, 2L), (4L, 3L), (10L, 11L)).toDF("a", "b")
 
-  private def withPolicy[T](policy: String, dir: String = null)(f: => T): T = {
-    val prevP = spark.conf.getOption(CheckpointPolicy.PolicyKey)
-    val prevD = spark.conf.getOption(CheckpointPolicy.DirKey)
-    spark.conf.set(CheckpointPolicy.PolicyKey, policy)
-    if (dir != null) spark.conf.set(CheckpointPolicy.DirKey, dir)
-    try f
-    finally {
-      prevP.fold(spark.conf.unset(CheckpointPolicy.PolicyKey))(
-        spark.conf.set(CheckpointPolicy.PolicyKey, _))
-      prevD.fold(spark.conf.unset(CheckpointPolicy.DirKey))(
-        spark.conf.set(CheckpointPolicy.DirKey, _))
-    }
+  /** Run `f` with the shared context's checkpoint dir set under `prefix`
+    * and return the dir; the previous value (normally none) is put back. */
+  private def withCheckpointDir[T](prefix: String)(f: => T): (String, T) = {
+    val sc = spark.sparkContext
+    val prev = CheckpointDirAccess.get(sc)
+    val dir = Files.createTempDirectory(prefix).toString
+    sc.setCheckpointDir(dir)
+    try (dir, f)
+    finally CheckpointDirAccess.restore(sc, prev)
   }
+
+  private def partFiles(f: java.io.File): Int =
+    if (f.isDirectory) f.listFiles.map(partFiles).sum
+    else if (f.getName.startsWith("part-")) 1 else 0
 
   private def ccLabels(): Seq[(Long, Long)] =
     TextDedup.connectedComponents(pairs, "a", "b")
@@ -40,32 +42,35 @@ class CheckpointPolicySpec extends SparkSpec {
     (1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L), (10L, 10L), (11L, 10L))
 
   test("connected components identical under local and reliable policies") {
-    val local = withPolicy("local")(ccLabels())
-    assert(local == expected)
-
-    val relDir = Files.createTempDirectory("graft_ckpt_rel").toString
-    val rel = withPolicy("reliable", relDir)(ccLabels())
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    assert(ccLabels() == expected)
+    val (_, rel) = withCheckpointDir("graft_ckpt_rel")(ccLabels())
     assert(rel == expected)
   }
 
   test("reliable policy writes replicated checkpoint files to the configured dir") {
-    val dir = Files.createTempDirectory("graft_ckpt_rel2").toString
-    withPolicy("reliable", dir) {
+    val (dir, n) = withCheckpointDir("graft_ckpt_rel2") {
       assert(ccLabels() == expected)
       // The RDD checkpoint dir must now contain materialized part files —
       // the durable artifact an executor loss recovers from.
-      val root = new java.io.File(
-        spark.sparkContext.getCheckpointDir.get.stripPrefix("file:"))
-      def partFiles(f: java.io.File): Int =
-        if (f.isDirectory) f.listFiles.map(partFiles).sum
-        else if (f.getName.startsWith("part-")) 1 else 0
-      assert(partFiles(root) > 0, s"no checkpoint part files under $root")
+      partFiles(new java.io.File(
+        spark.sparkContext.getCheckpointDir.get.stripPrefix("file:")))
     }
+    assert(n > 0, s"no checkpoint part files under $dir")
+  }
+
+  test("a cleared checkpoint dir makes cuts local again: no new files") {
+    val (dir, _) = withCheckpointDir("graft_ckpt_clear")(ccLabels())
+    val root = new java.io.File(dir)
+    val before = partFiles(root)
+    assert(before > 0)
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    assert(ccLabels() == expected)
+    assert(partFiles(root) == before)
   }
 
   test("kCore and bfsHops run under the reliable policy") {
-    val dir = Files.createTempDirectory("graft_ckpt_rel3").toString
-    withPolicy("reliable", dir) {
+    withCheckpointDir("graft_ckpt_rel3") {
       // Triangle 1-2-3 plus pendant 4: 2-core = the triangle.
       val und = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("src", "dst")
       val sym = und.unionByName(
@@ -80,20 +85,9 @@ class CheckpointPolicySpec extends SparkSpec {
   }
 
   test("all policies stay pin-neutral (no cacheManager entries)") {
-    for ((p, d) <- Seq(
-        ("local", null),
-        ("reliable", Files.createTempDirectory("graft_ckpt_pin_r").toString))) {
-      withPolicy(p, d)(ccLabels())
-      assert(spark.sharedState.cacheManager.isEmpty, s"policy $p left pins")
-    }
-  }
-
-  test("unknown policy fails loudly") {
-    // parquet was a policy once; it is gone and must not fall back silently
-    for (p <- Seq("ramdisk", "parquet")) withPolicy(p) {
-      intercept[IllegalArgumentException] {
-        CheckpointPolicy.materialize(pairs)
-      }
-    }
+    ccLabels()
+    assert(spark.sharedState.cacheManager.isEmpty, "local cuts left pins")
+    withCheckpointDir("graft_ckpt_pin_r")(ccLabels())
+    assert(spark.sharedState.cacheManager.isEmpty, "reliable cuts left pins")
   }
 }

@@ -144,31 +144,25 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("closedSessions: flatMapGroupsWithState emits the session on timeout") {
-    implicit val s = spark
-    implicit val sqlCtx = spark.sqlContext
+    // No-data batches off (on a session of its own, so no other suite's
+    // query sees the setting): a ProcessingTimeTimeout then fires only in
+    // a batch this test triggers, and no batch runs when the query stops.
+    implicit val s = spark.newSession()
+    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    implicit val sqlCtx = s.sqlContext
     val in = MemoryStream[Streams.Evt]
-    val out = Streams.closedSessions(in.toDS(), "500 milliseconds")
-    // explicit trigger interval: with ProcessingTimeTimeout the engine
-    // schedules empty batches to fire timeouts — at the default
-    // as-fast-as-possible trigger that livelocks processAllAvailable, so
-    // poll the sink with a deadline instead
-    val q = out.writeStream.format("memory").queryName("closed_out")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
-      .start()
+    val q = Streams.closedSessions(in.toDS(), "500 milliseconds")
+      .writeStream.format("memory").queryName("closed_out")
+      .outputMode("append").start()
     in.addData(Streams.Evt(1L, ts("2024-01-01 00:00:00"), 2.0),
       Streams.Evt(1L, ts("2024-01-01 00:01:00"), 3.0))
-    val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-    var rows = Array.empty[Streams.SessionOut]
-    while (rows.isEmpty && System.nanoTime < deadline) {
-      Thread.sleep(200)
-      rows = spark.table("closed_out").as[Streams.SessionOut].collect()
-    }
-    // the timeout keeps no-data batches (each a job) firing every 100 ms;
-    // stopping inside one interrupts it mid-broadcast, so stop between them
-    val idle = System.nanoTime + 10L * 1000 * 1000 * 1000
-    while (q.status.isTriggerActive && System.nanoTime < idle) Thread.sleep(2)
+    q.processAllAvailable()
+    Thread.sleep(800) // past user 1's 500 ms processing-time timeout
+    // user 2's event runs the batch that times user 1 out
+    in.addData(Streams.Evt(2L, ts("2024-01-01 00:02:00"), 1.0))
+    q.processAllAvailable()
     q.stop()
+    val rows = s.table("closed_out").as[Streams.SessionOut].collect()
     assert(rows.exists(r => r.user_id == 1L && r.n_events == 2 && r.total_value == 5.0))
   }
 }

@@ -23,7 +23,7 @@ class CheckpointPolicySpec extends SparkSpec {
     * and return the dir; the previous value (normally none) is put back. */
   private def withCheckpointDir[T](prefix: String)(f: => T): (String, T) = {
     val sc = spark.sparkContext
-    val prev = CheckpointDirAccess.get(sc)
+    val prev = sc.getCheckpointDir
     val dir = Files.createTempDirectory(prefix).toString
     sc.setCheckpointDir(dir)
     try (dir, f)

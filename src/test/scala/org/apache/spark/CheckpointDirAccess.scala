@@ -1,11 +1,10 @@
 package org.apache.spark
 
-/** Test-side access to `SparkContext.checkpointDir`, which is
+/** Test-side write access to `SparkContext.checkpointDir`, which is
   * `private[spark]`: Spark sets it (`setCheckpointDir`) but has no public
   * unset, and a suite that sets it must put the previous value back or
   * every later suite in the JVM gets reliable lineage cuts. */
 object CheckpointDirAccess {
-  def get(sc: SparkContext): Option[String] = sc.checkpointDir
   def restore(sc: SparkContext, dir: Option[String]): Unit =
     sc.checkpointDir = dir
 }
